@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataops_testgen_spark.session import memo
+
 CORRELATED_COLUMNS_TYPE = "Correlated_Columns"
 CORRELATION_LIKELIHOOD = "Possible"
 CORRELATION_RISK = 0.33
@@ -254,12 +256,9 @@ def correlation_screen(df: DataFrame, cols: list[str] | None = None,
 
     # the fused exprs depend only on the column-name list — cached per
     # session so the cascade's Pearson and rank passes (and every bench
-    # rerun) share one build (inference/helpers.cached_expr discipline)
-    from dataops_testgen_spark.inference import helpers as H
-
-    aggs, entries = H.cached_expr(
-        df.sparkSession.sparkContext.applicationId,
-        f"corr_screen_aggs:{','.join(cols)}", build)
+    # rerun) share one build
+    aggs, entries = memo(df.sparkSession,
+                         ("corr_screen_aggs", tuple(cols)), build)
     one = df.agg(*aggs)
     out = (one.select(F.explode(F.array(*entries)).alias("p"))
            .select("p.col_a", "p.col_b", "p.n", "p.corr"))

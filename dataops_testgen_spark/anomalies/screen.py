@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from dataops_testgen_spark.anomalies import catalog as CAT
 from dataops_testgen_spark.inference import helpers as H
+from dataops_testgen_spark.session import memo
 
 _OUT_COLS = ["table_name", "column_name", "anomaly_type", "data_object",
              "likelihood", "detail", "dq_prevalence"]
@@ -33,7 +34,7 @@ def _column_screen(profile: DataFrame) -> DataFrame:
     """All Column-class rules in ONE pass: per rule a (fires, prevalence)
     struct; explode and filter. One job regardless of rule count. The
     rule structs reference only fixed profile-schema names, so the
-    expression array builds once per session (H.cached_expr), not once
+    expression array builds once per session (session.memo), not once
     per screened table (~2 s of driver round-trips saved per fresh
     table, r12 verdict #6)."""
     def build():
@@ -56,9 +57,7 @@ def _column_screen(profile: DataFrame) -> DataFrame:
             )
         return entries
 
-    entries = H.cached_expr(
-        profile.sparkSession.sparkContext.applicationId,
-        "column_screen_rules", build)
+    entries = memo(profile.sparkSession, ("column_screen_rules",), build)
     exploded = profile.select(
         "table_name", "column_name",
         F.explode(F.array(*entries)).alias("a"),

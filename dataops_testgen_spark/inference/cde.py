@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.inference import helpers as H
+from dataops_testgen_spark.session import memo
 
 
 def flag_cde(profile_with_types: DataFrame) -> DataFrame:
@@ -42,6 +43,5 @@ def flag_cde(profile_with_types: DataFrame) -> DataFrame:
     # fixed profile-schema expression — one build per session
     return profile_with_types.withColumn(
         "critical_data_element",
-        H.cached_expr(profile_with_types.sparkSession.sparkContext
-                      .applicationId, "cde_flag", build),
+        memo(profile_with_types.sparkSession, ("cde_flag",), build),
     )

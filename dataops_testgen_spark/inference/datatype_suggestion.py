@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.inference import helpers as H
+from dataops_testgen_spark.session import memo
 
 
 def _varchar(size: Column) -> Column:
@@ -78,9 +79,8 @@ def add_datatype_suggestion(profile: DataFrame) -> DataFrame:
     if "functional_data_type" not in profile.columns:
         profile = profile.withColumn("functional_data_type", F.lit(None).cast("string"))
     # fixed profile-schema expression — one build per session
-    suggestion = H.cached_expr(
-        profile.sparkSession.sparkContext.applicationId,
-        "datatype_suggestion",
+    suggestion = memo(
+        profile.sparkSession, ("datatype_suggestion",),
         lambda: F.when(
             (c("record_ct") > 500) & ~H.ilike(c("column_name"), "%id"),
             F.when(c("general_type") == "A", _alpha_suggestion(c))

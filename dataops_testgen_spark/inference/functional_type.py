@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.inference import helpers as H
+from dataops_testgen_spark.session import memo
 
 MONTHS_RE = "(jan|feb|mar|apr|may|jun|jul|aug|sep|oct|nov|dec)"
 
@@ -491,8 +492,8 @@ def _apply_positional_city_1(df: DataFrame) -> DataFrame:
         .withColumn("_city1", F.lit(True))
     )
     out = df.join(flagged, ["table_name", "ordinal_position"], "left")
-    expr = H.cached_expr(
-        df.sparkSession.sparkContext.applicationId, "city1_expr",
+    expr = memo(
+        df.sparkSession, ("city1_expr",),
         lambda: F.when(
             F.col("_city1")
             & F.lower(F.col("column_name")).rlike("c(i)?ty")
@@ -528,15 +529,13 @@ def _apply_positional_city_2(df: DataFrame) -> DataFrame:
         )
         return F.when(cond, F.lit("City")).otherwise(F.col(FDT))
 
-    expr = H.cached_expr(df.sparkSession.sparkContext.applicationId,
-                         "city2_expr", build)
+    expr = memo(df.sparkSession, ("city2_expr",), build)
     return out.withColumn(FDT, expr).drop("_city2")
 
 
 def _apply_id_refinement(df: DataFrame) -> DataFrame:
     """ID → ID-Secondary/ID-Group → ID-Unique[-SK] → ID-FK (:532-571)."""
     c = F.col
-    app = df.sparkSession.sparkContext.applicationId
 
     def build():
         value_pct = F.round(100.0 * c("value_ct").cast("double")
@@ -566,7 +565,7 @@ def _apply_id_refinement(df: DataFrame) -> DataFrame:
         ).otherwise(c(FDT))
         return sec, uniq, fk
 
-    sec, uniq, fk = H.cached_expr(app, "id_refinement_exprs", build)
+    sec, uniq, fk = memo(df.sparkSession, ("id_refinement_exprs",), build)
     df = df.withColumn(FDT, sec).withColumn(FDT, uniq)
     # ID-FK: same column name is ID-Unique[-SK] in a DIFFERENT table
     uniques = (
@@ -605,40 +604,25 @@ def _apply_measurement_pct(df: DataFrame) -> DataFrame:
         ).otherwise(c(FDT))
         return name_expr, pat_expr
 
-    name_expr, pat_expr = H.cached_expr(
-        df.sparkSession.sparkContext.applicationId,
-        "measurement_pct_exprs", build)
+    name_expr, pat_expr = memo(
+        df.sparkSession, ("measurement_pct_exprs",), build)
     return df.withColumn(FDT, name_expr).withColumn(FDT, pat_expr)
 
 
-# (app_id, id_mask, sk_mask) -> the 7 cascade layer Columns. Assembling the
-# 622-line cascade is thousands of py4j round-trips (~3-6 s per call,
-# measured) repeated IDENTICALLY on every apply_inference; the Columns are
-# unbound to any DataFrame, so reuse is safe — same precedent as the
-# profiler's _EXPR_CACHE. Keying on applicationId drops entries from a
-# stopped session's dead gateway.
-_CASCADE_CACHE: dict[tuple, tuple] = {}
-
-
-def _cascade_layers(app_id: str, id_mask: str, sk_mask: str) -> tuple:
-    key = (app_id, id_mask, sk_mask)
-    got = _CASCADE_CACHE.get(key)
-    if got is None:
-        # evict other sessions' entries so stopped-gateway handles don't
-        # accumulate across sessions in a long-lived process
-        for stale in [k for k in _CASCADE_CACHE if k[0] != app_id]:
-            del _CASCADE_CACHE[stale]
-        c = F.col
-        rd = F.to_date(c("run_date"))
-        got = (_layer1_initial(c, rd, id_mask, sk_mask),
-               _layer2_process_ts(c),
-               _layer3_periods(c, rd),
-               _layer4_period_overrides(c),
-               _layer5_address(c),
-               _layer6_names_users(c),
-               _layer7_classes_final(c))
-        _CASCADE_CACHE[key] = got
-    return got
+# The 7 cascade layer Columns. Assembling the 622-line cascade is thousands
+# of py4j round-trips (~3-6 s per call, measured) repeated IDENTICALLY on
+# every apply_inference; the Columns are unbound to any DataFrame, so they
+# are memoized per session and (id_mask, sk_mask).
+def _cascade_layers(id_mask: str, sk_mask: str) -> tuple:
+    c = F.col
+    rd = F.to_date(c("run_date"))
+    return (_layer1_initial(c, rd, id_mask, sk_mask),
+            _layer2_process_ts(c),
+            _layer3_periods(c, rd),
+            _layer4_period_overrides(c),
+            _layer5_address(c),
+            _layer6_names_users(c),
+            _layer7_classes_final(c))
 
 
 def infer_functional_datatypes(
@@ -651,8 +635,9 @@ def infer_functional_datatypes(
     Mask defaults follow table_groups defaults
     (`dbsetup/030_initialize_new_schema_structure.sql:110-111`).
     """
-    l1, l2, l3, l4, l5, l6, l7 = _cascade_layers(
-        profile.sparkSession.sparkContext.applicationId, id_mask, sk_mask)
+    l1, l2, l3, l4, l5, l6, l7 = memo(
+        profile.sparkSession, ("cascade", id_mask, sk_mask),
+        lambda: _cascade_layers(id_mask, sk_mask))
     df = profile.withColumn(FDT, l1)
     df = df.withColumn(FDT, l2)
     df = df.withColumn(FDT, l3)
@@ -738,9 +723,8 @@ def infer_table_types(profile_fdt: DataFrame, history: DataFrame | None = None) 
         )
         return aggs, ttype
 
-    aggs, table_type = H.cached_expr(
-        profile_fdt.sparkSession.sparkContext.applicationId,
-        "table_type_exprs", build)
+    aggs, table_type = memo(
+        profile_fdt.sparkSession, ("table_type_exprs",), build)
     census = base.groupBy("table_name").agg(*aggs)
     return (
         census.join(period, "table_name")

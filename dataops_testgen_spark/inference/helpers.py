@@ -17,29 +17,6 @@ def ilike(col: Column, pattern: str) -> Column:
     return F.lower(col).like(pattern.lower())
 
 
-# (app_id, key) -> prebuilt Column (or list of Columns). The inference/
-# screening rule expressions reference ONLY the fixed profile-relation
-# schema by name, so the py4j expression trees are table-independent and
-# reusable across every profiled table — rebuilding them is thousands of
-# driver round-trips per fresh table (measured ~4-5 s per
-# profile→infer→screen cycle, r12 verdict #6). Keyed on applicationId so
-# entries from a stopped session's dead gateway are evicted, mirroring
-# profiling/profiler.py's _EXPR_CACHE.
-_STATIC_EXPR_CACHE: dict[tuple[str, str], object] = {}
-
-
-def cached_expr(app_id: str, key: str, build):
-    """Memoize a table-independent Column (or Column list) per session."""
-    k = (app_id, key)
-    got = _STATIC_EXPR_CACHE.get(k)
-    if got is None:
-        for stale in [x for x in _STATIC_EXPR_CACHE if x[0] != app_id]:
-            del _STATIC_EXPR_CACHE[stale]
-        got = build()
-        _STATIC_EXPR_CACHE[k] = got
-    return got
-
-
 def charcount(col: Column, search: str) -> Column:
     """fn_charcount: occurrences of ``search`` in ``col`` (:27-34)."""
     return (F.length(col) - F.length(F.replace(col, F.lit(search), F.lit("")))) / len(search)

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.inference import helpers as H
+from dataops_testgen_spark.session import memo
 
 
 def _primary_flag(c) -> Column:
@@ -110,10 +111,10 @@ def flag_pii(profile_fdt: DataFrame) -> DataFrame:
     """profile DF with functional_data_type → + pii_flag."""
     c = F.col
     # both screens reference only fixed profile-schema names — built once
-    # per session (helpers.cached_expr), not once per profiled table
-    app = profile_fdt.sparkSession.sparkContext.applicationId
-    primary, secondary = H.cached_expr(
-        app, "pii_flags", lambda: (_primary_flag(c), _secondary_flag(c)))
+    # per session (session.memo), not once per profiled table
+    primary, secondary = memo(
+        profile_fdt.sparkSession, ("pii_flags",),
+        lambda: (_primary_flag(c), _secondary_flag(c)))
     df = profile_fdt.withColumn(
         "pii_flag",
         F.when(c("general_type") == "A", primary),

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.profiling.profiler import PROFILE_SCHEMA
+from dataops_testgen_spark.session import memo
 
 KEY_FIELDS = ["table_name", "column_name"]
 META_FIRST = ["ordinal_position", "column_type", "general_type", "is_decimal"]
@@ -308,15 +309,10 @@ def merge_profiles(profiles: DataFrame) -> DataFrame:
 
     # The agg expression list depends only on which sketch columns are
     # present (never on the table), so the ~120 Column objects are built
-    # once per (session, signature) instead of per merge call — the
-    # cascade/profiler cached_expr discipline (inference/helpers.py).
-    from dataops_testgen_spark.inference.helpers import cached_expr
-
-    sig = ",".join(c for c, present in (
-        ("hll", has_sketches), ("q", has_qsketch), ("f", has_fsketch),
-        ("s", has_ssketch), ("d", has_days), ("p", has_stdpat)) if present)
-    aggs = cached_expr(profiles.sparkSession.sparkContext.applicationId,
-                       f"merge_aggs:{sig}", _build_aggs)
+    # once per (session, signature) instead of per merge call.
+    sig = (has_sketches, has_qsketch, has_fsketch, has_ssketch, has_days,
+           has_stdpat)
+    aggs = memo(profiles.sparkSession, ("merge_aggs", *sig), _build_aggs)
     g = profiles.groupBy(*KEY_FIELDS).agg(*aggs)
     if has_qsketch:
         g = g.withColumn("__q__", _merge_quantile_sketches_udf()(F.col("__qsk__"))) \

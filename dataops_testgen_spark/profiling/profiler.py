@@ -30,6 +30,7 @@ from dataops_testgen_spark import schema_scan
 from dataops_testgen_spark.profiling import expressions as X
 from dataops_testgen_spark.profiling import regexes as RX
 from dataops_testgen_spark.profiling.secondary import secondary_profile
+from dataops_testgen_spark.session import memo
 
 # Metrics scaled by 1/sample_ratio when sampling (count-like). Distinct counts
 # intentionally NOT scaled (project_update_profile_results_to_estimates.sql).
@@ -180,34 +181,6 @@ def _column_exprs(col: schema_scan.ColumnChars, idx: int, run_date: _dt.date,
     # so callers never have to parse it back out of the expression tree.
     return [(f"c{idx}__{name}", expr.alias(f"c{idx}__{name}"))
             for name, expr in metrics.items()]
-
-
-# (app_id, column signature, slot, run_date, mode) -> (alias, Column) list.
-# A profile plan is ~60 metrics × columns of py4j Column trees; assembling
-# one is thousands of driver round-trips (~1-2 s for a wide table) repeated
-# IDENTICALLY for every same-shaped table/slice in a session — the
-# incremental-profiling and monitor paths profile the same shape every
-# cycle. Columns are unbound to any DataFrame, so reuse is safe; keying on
-# the applicationId drops entries from a stopped session's dead gateway.
-_EXPR_CACHE: dict[tuple, list] = {}
-
-
-def _column_exprs_cached(app_id: str, col: schema_scan.ColumnChars, idx: int,
-                         run_date: _dt.date, distinct: str,
-                         exact_percentiles: bool):
-    key = (app_id, col.column_name, col.column_type, col.general_type,
-           col.is_decimal, idx, run_date.toordinal(), distinct,
-           exact_percentiles)
-    got = _EXPR_CACHE.get(key)
-    if got is None:
-        # evict entries from stopped sessions (dead py4j gateways): a
-        # long-lived process spanning many Spark sessions would otherwise
-        # accumulate unreachable Column handles without bound
-        for stale in [k for k in _EXPR_CACHE if k[0] != app_id]:
-            del _EXPR_CACHE[stale]
-        got = _column_exprs(col, idx, run_date, distinct, exact_percentiles)
-        _EXPR_CACHE[key] = got
-    return got
 
 
 def _classify_std_pattern(vals: dict, value_ct: int) -> str | None:
@@ -414,11 +387,20 @@ def profile_table(
     # pure noise at scale.
     distinct = "approx" if approx else "exact"
 
-    app_id = spark.sparkContext.applicationId
+    # A profile plan is ~60 metrics × columns of py4j Column trees;
+    # assembling one is thousands of driver round-trips (~1-2 s for a wide
+    # table) repeated IDENTICALLY for every same-shaped table/slice in a
+    # session — the incremental-profiling and monitor paths profile the
+    # same shape every cycle. The Columns are unbound to any DataFrame, so
+    # each column's list is memoized per session and column signature.
     exprs = []
     for i, col in enumerate(cols):
-        exprs.extend(_column_exprs_cached(app_id, col, i, run_date,
-                                          distinct, exact_percentiles))
+        exprs.extend(memo(
+            spark, ("profile_exprs", col.column_name, col.column_type,
+                    col.general_type, col.is_decimal, i,
+                    run_date.toordinal(), distinct, exact_percentiles),
+            lambda: _column_exprs(col, i, run_date, distinct,
+                                  exact_percentiles)))
     # TypedImperativeAggregates: keep sketches out of the codegen'd main agg
     sketch_exprs = [
         F.hll_sketch_agg(F.col(col.column_name).cast("string"))

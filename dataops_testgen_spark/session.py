@@ -1,14 +1,31 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the one session-scoped memo.
 
 Defaults target local[N] testing but the settings are the ones that matter on
 a real cluster too: AQE on (runtime re-plan, skew-join handling, partition
 coalescing), Arrow for any pandas interchange, UTC session timezone so date
 metrics are deterministic.
-"""
 
+``memo(spark, key, build)`` is the only memo in the engine. It holds py4j
+Column trees (profile metrics, the inference cascade, screen rules) and the
+driver seats' shared DataFrames (loaded relations, profiles, inference,
+checkpointed intermediates). Its contract:
+
+- keys are tuples namespaced by their first element (``("load", sf_dir,
+  table)``); entries are stored under ``(applicationId, key)``;
+- a hit is a lock-free ``dict.get``; only its counter bump takes the lock;
+- a miss runs ``build()`` outside the lock, so builders may call ``memo``
+  again and may fan out to threads; then one lock drops every entry of
+  another application (a stopped session's Columns and checkpoints are dead
+  handles) and inserts; the first insert wins, so racing builders of one key
+  all return the same object;
+- hits and misses are counted per namespace and read with
+  ``memo_stats(spark)``; the counters belong to the application and reset
+  when the session changes.
+"""
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -40,8 +57,7 @@ def get_spark(app_name: str = "dataops_testgen_spark", shuffle_partitions: int |
         # source is identical across tables — measured: 240 compiles on
         # table 1, ~1 on table 2 once the cache can hold a cycle). Turns
         # the per-fresh-table compile tax into a once-per-session cost.
-        .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.ui.enabled", "false")
         # PySpark 4 captures a Python call site for every Column/DataFrame
         # op when dataFrameDebugging is on (the default): a conf read, a
@@ -63,6 +79,60 @@ def get_spark(app_name: str = "dataops_testgen_spark", shuffle_partitions: int |
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_MISSING = object()
+_entries: dict[tuple, object] = {}       # (app_id, key) -> value
+_counts: dict[tuple, list[int]] = {}     # (app_id, namespace) -> [hits, misses]
+_lock = threading.Lock()
+_app: str | None = None                  # the application the memo holds
+_ctx: tuple = (None, None)               # (SparkContext, its applicationId)
+
+
+def _app_id(spark) -> str:
+    # applicationId is two py4j round trips; remember it for the context
+    # object (a restarted session brings a new SparkContext object)
+    global _ctx
+    sc = spark.sparkContext
+    ctx = _ctx
+    if ctx[0] is not sc:
+        ctx = _ctx = (sc, sc.applicationId)
+    return ctx[1]
+
+
+def memo(spark, key: tuple, build):
+    """``build()``'s result, memoized per ``spark``'s application under the
+    namespaced tuple ``key`` (see the module docstring)."""
+    global _app
+    app = _app_id(spark)
+    got = _entries.get((app, key), _MISSING)
+    if got is not _MISSING:
+        with _lock:
+            counts = _counts.get((app, key[0]))
+            if counts is not None:
+                counts[0] += 1
+        return got
+    value = build()
+    with _lock:
+        if app != _app:  # every held entry belongs to the old _app
+            _entries.clear()
+            _counts.clear()
+            _app = app
+        _counts.setdefault((app, key[0]), [0, 0])[1] += 1
+        return _entries.setdefault((app, key), value)
+
+
+def memo_stats(spark) -> dict[str, dict[str, int]]:
+    """``{namespace: {"hits", "misses", "entries"}}`` for ``spark``'s
+    application; empty once its session has been replaced."""
+    app = _app_id(spark)
+    with _lock:
+        out = {ns: {"hits": h, "misses": m, "entries": 0}
+               for (a, ns), (h, m) in _counts.items() if a == app}
+        for a, key in _entries:
+            if a == app:
+                out[key[0]]["entries"] += 1
+    return out
 
 
 def is_leaf_relation(df) -> bool:

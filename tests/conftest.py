@@ -1,8 +1,10 @@
 import os
-import re
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
+import xml.etree.ElementTree as ET
 
 import duckdb
 import pytest
@@ -25,7 +27,9 @@ from dataops_testgen_spark.session import get_spark
 # subprocesses (fixtures are module- or session-scoped per process, so the
 # file is the correct isolation unit), runs every collected test with the
 # same assertions (nothing is deselected, skipped or weakened), streams
-# each worker's summary, and fails the parent if ANY worker fails. A
+# each worker's summary, and fails the parent if ANY worker fails: outcomes
+# come from each worker's own --junitxml file (worker_tally), and a worker
+# that exits non-zero or leaves no readable file is a failure. A
 # targeted invocation (single file, -k, --collect-only, < 200 items)
 # keeps the plain serial path, as does TG_TESTS_SERIAL=1.
 # ---------------------------------------------------------------------------
@@ -63,6 +67,24 @@ def _parallel_plan(items, nworkers):
     return [b[1] for b in bins if b[1]]
 
 
+def worker_tally(returncode, junit_path):
+    """(passed, failed, errors) of one worker pytest run, read from its junit
+    xml. Fails closed: a missing or unreadable file is one error, and a
+    non-zero exit with no failure or error recorded is one failure."""
+    try:
+        root = ET.parse(junit_path).getroot()
+    except (OSError, ET.ParseError):
+        return 0, 0, 1
+    suites = [root] if root.tag == "testsuite" else root.findall("testsuite")
+    tests, failed, errors, skipped = (
+        sum(int(s.get(k, 0)) for s in suites)
+        for k in ("tests", "failures", "errors", "skipped"))
+    passed = tests - failed - errors - skipped
+    if returncode != 0 and not (failed or errors):
+        failed = 1
+    return passed, failed, errors
+
+
 def pytest_runtestloop(session):
     if os.environ.get(_PAR_WORKER_ENV) or os.environ.get("TG_TESTS_SERIAL"):
         return None
@@ -87,6 +109,7 @@ def pytest_runtestloop(session):
         f"{sum(len(p) for p in plan)} files -> {len(plan)} workers "
         f"(local[{worker_cpus}] each); TG_TESTS_SERIAL=1 disables")
     t0 = time.time()
+    junit_dir = tempfile.mkdtemp(prefix="tg_par_junit_")
     procs = []
     for i, files in enumerate(plan):
         env = dict(os.environ)
@@ -94,7 +117,8 @@ def pytest_runtestloop(session):
         env["SPARK_GRAFT_CPUS"] = str(worker_cpus)
         env.setdefault("SPARK_DRIVER_MEMORY", "10g")
         cmd = [sys.executable, "-m", "pytest", "-q",
-               f"--basetemp=/tmp/tg_par_tmp_{os.getpid()}_{i}"]
+               f"--basetemp=/tmp/tg_par_tmp_{os.getpid()}_{i}",
+               f"--junitxml={junit_dir}/worker{i}.xml"]
         if getattr(config.option, "exitfirst", False):
             cmd.append("-x")
         cmd += files
@@ -107,19 +131,15 @@ def pytest_runtestloop(session):
     try:
         for i, files, p in procs:
             out, _ = p.communicate()
-            m_pass = re.search(r"(\d+) passed", out)
-            m_fail = re.search(r"(\d+) failed", out)
-            m_err = re.search(r"(\d+) error", out)
-            npass = int(m_pass.group(1)) if m_pass else 0
-            nfail = int(m_fail.group(1)) if m_fail else 0
-            nerr = int(m_err.group(1)) if m_err else 0
+            npass, nfail, nerr = worker_tally(
+                p.returncode, f"{junit_dir}/worker{i}.xml")
             total_passed += npass
             total_failed += nfail
             total_error += nerr
             tail = out.strip().splitlines()[-1] if out.strip() else "(no output)"
             say(f"worker {i} rc={p.returncode}: {tail} "
                 f"[{len(files)} files]")
-            if p.returncode != 0 or nfail or nerr:
+            if nfail or nerr:
                 fail_outputs.append(out)
                 if getattr(config.option, "exitfirst", False):
                     for _, _, q in procs:
@@ -130,6 +150,8 @@ def pytest_runtestloop(session):
             if q.poll() is None:
                 q.terminate()
         raise
+    finally:
+        shutil.rmtree(junit_dir, ignore_errors=True)
     dt = time.time() - t0
     for out in fail_outputs:
         say("---- failing worker output ----")

@@ -387,7 +387,7 @@ def test_merge_profiles_with_empty_slice(spark, sf_dir):
 
 def test_expr_cache_reuse_same_shape(spark, sf_dir):
     """Profiling the same shape twice reuses the assembled expression lists
-    (object identity) and produces identical results — the warm-path
+    from the session memo and produces identical results — the warm-path
     compile-tax cut for incremental/monitor profiling (VERDICT r4 stretch
     #9)."""
     import datetime
@@ -395,30 +395,40 @@ def test_expr_cache_reuse_same_shape(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from dataops_testgen_spark.profiling import profiler as P
+    from dataops_testgen_spark.session import memo_stats
+
+    def stats():
+        return memo_stats(spark).get(
+            "profile_exprs", {"hits": 0, "misses": 0, "entries": 0})
 
     df = spark.read.parquet(f"{sf_dir}/orders.parquet") \
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
-    rd = datetime.date(2026, 1, 1)
-    app = spark.sparkContext.applicationId
-    P._EXPR_CACHE.clear()
+    # run dates no other test profiles with, so the first profile misses
+    rd = datetime.date(2031, 7, 7)
+    s0 = stats()
     a = {r["column_name"]: r for r in
          P.profile_table(df, "orders", run_date=rd).collect()}
-    n_entries = len(P._EXPR_CACHE)
-    assert n_entries == 3  # one per column
-    # same shape, different slice -> cache hits, no new entries
+    s1 = stats()
+    assert s1["misses"] - s0["misses"] == 3  # one per column
+    assert s1["entries"] - s0["entries"] == 3
+    # same shape, different slice -> memo hits, no new misses or entries
     b = {r["column_name"]: r for r in
          P.profile_table(df.filter(F.col("o_orderkey") % 2 == 0), "orders",
                          run_date=rd).collect()}
-    assert len(P._EXPR_CACHE) == n_entries
-    for key in P._EXPR_CACHE:
-        assert key[0] == app
+    s2 = stats()
+    assert s2["misses"] == s1["misses"]
+    assert s2["hits"] - s1["hits"] == 3
+    assert s2["entries"] == s1["entries"]
     # results still correct: slice metrics differ but schema agrees
     assert set(a) == set(b)
     assert a["o_orderkey"]["record_ct"] > b["o_orderkey"]["record_ct"]
     # a different run_date must NOT hit the same entries (date literals)
-    P.profile_table(df, "orders", run_date=datetime.date(2026, 2, 2)) \
+    P.profile_table(df, "orders", run_date=datetime.date(2031, 8, 8)) \
         .collect()
-    assert len(P._EXPR_CACHE) == 2 * n_entries
+    s3 = stats()
+    assert s3["misses"] - s2["misses"] == 3
+    # the entries are held under this session's application
+    assert s3["entries"] - s2["entries"] == 3
 
 
 def test_slice_col_single_pass_matches_filtered_slices(spark, sf_dir):

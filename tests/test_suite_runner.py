@@ -1,0 +1,43 @@
+"""The parallel suite runner's per-worker tally (conftest.worker_tally)
+fails closed."""
+
+from conftest import worker_tally
+
+_ALL_PASS = """<?xml version="1.0" encoding="utf-8"?>
+<testsuites><testsuite name="pytest" errors="0" failures="0" skipped="0"
+ tests="4" time="1.0"></testsuite></testsuites>"""
+
+
+def _junit(tmp_path, text):
+    path = tmp_path / "worker.xml"
+    path.write_text(text)
+    return str(path)
+
+
+def test_clean_worker_counts_its_outcomes(tmp_path):
+    assert worker_tally(0, _junit(tmp_path, _ALL_PASS)) == (4, 0, 0)
+
+
+def test_skips_are_not_passes(tmp_path):
+    # the runner treats the missing outcome as a gap, hence a failure
+    text = _ALL_PASS.replace('skipped="0"', 'skipped="1"')
+    assert worker_tally(0, _junit(tmp_path, text)) == (3, 0, 0)
+
+
+def test_nonzero_exit_with_all_pass_junit_is_a_failure(tmp_path):
+    # e.g. a worker whose JVM died after the last test reported
+    assert worker_tally(1, _junit(tmp_path, _ALL_PASS)) == (4, 1, 0)
+
+
+def test_recorded_failures_are_not_double_counted(tmp_path):
+    text = _ALL_PASS.replace('failures="0"', 'failures="2"')
+    assert worker_tally(1, _junit(tmp_path, text)) == (2, 2, 0)
+
+
+def test_missing_junit_file_is_a_failure(tmp_path):
+    assert worker_tally(0, str(tmp_path / "none.xml")) == (0, 0, 1)
+    assert worker_tally(-9, str(tmp_path / "none.xml")) == (0, 0, 1)
+
+
+def test_truncated_junit_file_is_a_failure(tmp_path):
+    assert worker_tally(0, _junit(tmp_path, _ALL_PASS[:60])) == (0, 0, 1)

@@ -1400,6 +1400,9 @@ def q_pq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.round("est_cosine", 5).alias("est_cosine"), "rank")
 
 
+# Codeword norms and LUT entries are summed over subspaces in subspace
+# order, so equal code tuples score bit-identically and tie on neighbor_id
+# as on the Spark side, however DuckDB's threads split the aggregates.
 _SQL_PQ_TOPK = """
 WITH dims AS (
   SELECT vec_id, embedding[i]::DOUBLE AS x,
@@ -1415,8 +1418,11 @@ codes AS (SELECT vec_id, s, c FROM (
                    ROW_NUMBER() OVER (PARTITION BY vec_id, s
                                       ORDER BY dist, c) AS rn
               FROM d2) WHERE rn = 1),
-recon AS (SELECT codes.vec_id, SQRT(SUM(cw.w * cw.w)) AS est_norm
-            FROM codes JOIN cw ON codes.s = cw.s AND codes.c = cw.c
+cwn AS (SELECT s, c, list_sum(list(w * w ORDER BY j)) AS sq
+         FROM cw GROUP BY 1, 2),
+recon AS (SELECT codes.vec_id,
+                 SQRT(list_sum(list(cwn.sq ORDER BY codes.s))) AS est_norm
+            FROM codes JOIN cwn ON codes.s = cwn.s AND codes.c = cwn.c
            GROUP BY 1),
 qnorm AS (SELECT vec_id, SQRT(SUM(x * x)) AS qn
             FROM dims WHERE vec_id < 10 GROUP BY 1),
@@ -1424,7 +1430,7 @@ lut AS (SELECT q.vec_id AS query_id, cw.s, cw.c, SUM(q.x * cw.w) AS dp
           FROM dims q JOIN cw ON q.s = cw.s AND q.j = cw.j
          WHERE q.vec_id < 10 GROUP BY 1, 2, 3),
 score AS (SELECT lut.query_id, codes.vec_id AS neighbor_id,
-                 SUM(lut.dp) AS dot
+                 list_sum(list(lut.dp ORDER BY codes.s)) AS dot
             FROM codes JOIN lut ON codes.s = lut.s AND codes.c = lut.c
            WHERE codes.vec_id != lut.query_id GROUP BY 1, 2),
 est AS (SELECT s.query_id, s.neighbor_id,
@@ -5918,307 +5924,244 @@ def entry(spark: SparkSession) -> DataFrame:
     return profile_table(df, "lineitem", run_date=RUN_DATE)
 
 
+# One entry per driver seat: (name, Spark builder, DuckDB oracle SQL).
+SEATS = [
+    ("group_dependence_lineitem", q_group_dependence_lineitem,
+     _SQL_GROUP_DEPENDENCE),
+    ("multimodal_features_documents", q_multimodal_features_documents,
+     _SQL_MULTIMODAL),
+    ("ann_index_probe_embeddings", q_ann_index_probe,
+     _sql_ivfadc("b.vec_id % 2 = 0")),
+    ("bm25_index_probe_documents", q_bm25_index_probe_documents,
+     _sql_bm25_topk()),
+    ("minhash_index_probe_documents", q_minhash_index_probe,
+     _sql_minhash_index_probe()),
+    ("incremental_screen_orders", q_incremental_screen_orders,
+     ORC.anomaly_screen_sql("orders", _ORDERS_COLS, RUN_DATE)),
+    ("lr_quality_documents", q_lr_quality_documents, _SQL_LR_QUALITY),
+    ("nb_classify_documents", q_nb_classify_documents, _sql_nb_classify()),
+    ("curation_gate_documents", q_curation_gate_documents,
+     _sql_curation_gate()),
+    ("simhash_documents", q_simhash_documents, _sql_simhash()),
+    ("dup_substrings_documents", q_dup_substrings_documents,
+     _SQL_DUP_SUBSTRINGS),
+    ("decontaminate_documents", q_decontaminate_documents, _SQL_DECONTAMINATE),
+    ("anomaly_screen_orders", q_anomaly_screen_orders,
+     ORC.anomaly_screen_sql("orders", _ORDERS_COLS, RUN_DATE)),
+    ("anomaly_screen_customer_orders", q_anomaly_screen,
+     ORC.anomaly_screen_multi_sql(
+         [("customer", _CUSTOMER_COLS), ("orders", _ORDERS_COLS)], RUN_DATE,
+         corr_tables=_SCORE_TABLES())),
+    ("functional_types_customer", q_functional_types_customer,
+     ORC.functional_types_sql("customer", _CUSTOMER_COLS, RUN_DATE)),
+    ("functional_types_orders", q_functional_types_orders,
+     ORC.functional_types_sql("orders", _ORDERS_COLS, RUN_DATE)),
+    ("validation_prepass", q_validation_prepass, _SQL_VALIDATION_PREPASS),
+    ("spearman_screen_lineitem", q_spearman_screen_lineitem,
+     ORC.anomaly_screen_multi_sql(
+         [("lineitem_sp", _LINEITEM_SP_COLS)], RUN_DATE,
+         corr_tables=[("lineitem_sp", _LINEITEM_SP_COLS)],
+         pre_ctes=[("lineitem_sp", _LINEITEM_SP_SQL)],
+         spearman=True)),
+    ("correlation_screen_lineitem", q_correlation_screen_lineitem,
+     ORC.anomaly_screen_multi_sql(
+         [("lineitem_m", _LINEITEM_M_COLS)], RUN_DATE,
+         corr_tables=[("lineitem_m", _LINEITEM_M_COLS)],
+         pre_ctes=[("lineitem_m", _LINEITEM_M_SQL)])),
+    ("fk_discovery_tpch", q_fk_discovery_tpch, _SQL_FK_DISCOVERY),
+    ("spearman_lineitem", q_spearman_lineitem, _SQL_SPEARMAN_LINEITEM),
+    ("merged_profile_orders", q_merged_profile_orders,
+     _sql_profile_numeric_mergeable("orders", _MERGE_NUM_COLS)),
+    ("merged_profile_percentiles", q_merged_profile_percentiles,
+     _sql_merged_percentiles("orders", _MERGE_NUM_COLS)),
+    ("merged_topfreq_orders", q_merged_topfreq_orders,
+     _sql_merged_topfreq("orders", _MERGE_STR_COLS)),
+    ("score_breakdown_impact_co_li", q_score_breakdown_impact,
+     ORC.score_card_breakdown_dim_sql(
+         _SCORE_TABLES(), RUN_DATE, _score_test_selects(),
+         which="impact_dimension", corr_tables=_SCORE_TABLES())),
+    ("score_breakdown_column_co_li", q_score_breakdown_cols,
+     ORC.score_card_breakdown_cols_sql(
+         _SCORE_TABLES(), RUN_DATE, _score_test_selects(),
+         corr_tables=_SCORE_TABLES())),
+    ("score_breakdown_dimension_co_li", q_score_breakdown_dims,
+     ORC.score_card_breakdown_dim_sql(
+         _SCORE_TABLES(), RUN_DATE, _score_test_selects(),
+         which="dq_dimension", corr_tables=_SCORE_TABLES())),
+    ("score_card_issues_co_li", q_score_card_issues,
+     ORC.score_card_issues_sql(
+         _SCORE_TABLES(), RUN_DATE, _score_test_selects(),
+         corr_tables=_SCORE_TABLES())),
+    ("merge_defs_fixture", q_merge_defs_fixture, _sql_merge_defs()),
+    ("cat_tests_lineitem", q_cat_tests_lineitem, _sql_cat_tests()),
+    ("cat_tests_extended", q_cat_tests_extended, _sql_cat_tests_extended()),
+    ("cat_tests_remaining", q_cat_tests_remaining, _sql_cat_tests_remaining()),
+    ("aggregate_balance_orders", q_aggregate_balance_orders, _SQL_AGG_BALANCE),
+    ("aggregate_balance_pct_orders", q_aggregate_balance_pct,
+     _SQL_AGG_BALANCE_PCT),
+    ("aggregate_balance_range_orders", q_aggregate_balance_range,
+     _SQL_AGG_BALANCE_RANGE),
+    ("aggregate_minimum_orders", q_aggregate_minimum, _SQL_AGG_MINIMUM),
+    ("timeframe_combo_events", q_timeframe_combo_events, _SQL_TIMEFRAME),
+    ("timeframe_gain_events", q_timeframe_combo_gain, _SQL_TIMEFRAME_GAIN),
+    ("gen_constant_history", q_gen_constant_history,
+     _sql_gen_constant_history()),
+    ("drilldown_unique_orders", q_drilldown_unique_orders,
+     _SQL_DRILLDOWN_UNIQUE),
+    ("drilldown_min_val_lineitem", q_drilldown_min_val_lineitem,
+     _SQL_DRILLDOWN_MIN_VAL),
+    ("drilldown_outlier_lineitem", q_drilldown_outlier_lineitem,
+     _SQL_DRILLDOWN_OUTLIER),
+    ("drilldown_missing_days_events", q_drilldown_missing_days_events,
+     _SQL_DRILLDOWN_MISSING_DAYS),
+    ("drilldown_aggregate_balance", q_drilldown_aggregate_balance,
+     _SQL_DRILLDOWN_AGG_BALANCE),
+    ("semantic_dedup_embeddings", q_semantic_dedup_embeddings,
+     _SQL_SEMANTIC_DEDUP),
+    ("asof_join_events", q_asof_join_events, _SQL_ASOF_JOIN),
+    ("asof_nearest_events", q_asof_nearest_events, _SQL_ASOF_NEAREST),
+    ("top_freq_orders", q_top_freq_orders,
+     _sql_top_freq("orders", ["o_orderstatus", "o_orderpriority"])),
+    ("top_patterns_part", q_top_patterns_part,
+     _sql_top_patterns("part", ["p_brand", "p_type", "p_name"])),
+    ("hybrid_search_documents", q_hybrid_search_documents,
+     _sql_hybrid_search()),
+    ("ref_orphans_events", q_ref_orphans_events, _SQL_REF_ORPHANS),
+    ("drilldown_masked_customer", q_drilldown_masked_customer,
+     _SQL_DRILLDOWN_MASKED),
+    ("bigram_lm_documents", q_bigram_lm_documents, _SQL_BIGRAM_LM),
+    ("trigram_lm_documents", q_trigram_lm_documents, _SQL_TRIGRAM_LM),
+    ("ngram_lm_documents", q_ngram_lm_documents, _SQL_NGRAM_LM),
+    ("kmeans_embeddings", q_kmeans_embeddings, _SQL_KMEANS),
+    ("fuzzy_pairs_part", q_fuzzy_pairs_part, _SQL_FUZZY_PAIRS_PART),
+    ("generated_tests_lineitem", q_generated_tests,
+     ORC.generated_test_params_sql("lineitem", _LINEITEM_COLS_SPEC, RUN_DATE)),
+    ("generated_test_keys_lineitem", q_generated_test_keys,
+     ORC.generated_test_keys_sql("lineitem", _LINEITEM_COLS_SPEC, RUN_DATE)),
+    ("score_category_fixture", q_score_category, _sql_score_category()),
+    ("score_overall_history_fixture", q_score_overall_history,
+     _sql_score_overall_history()),
+    ("embedding_cosine_pairs", q_embedding_cosine_pairs, _SQL_COSINE_PAIRS),
+    ("ann_topk_embeddings", q_ann_topk_embeddings, _SQL_ANN_TOPK),
+    ("ivf_topk_embeddings", q_ivf_topk_embeddings, _SQL_IVF_TOPK),
+    ("pq_topk_embeddings", q_pq_topk_embeddings, _SQL_PQ_TOPK),
+    ("unigram_logprob_documents", q_unigram_logprob_documents,
+     _SQL_UNIGRAM_LOGPROB),
+    ("c4_clean_documents", q_c4_clean_documents, _SQL_C4_CLEAN),
+    ("sample_documents", q_sample_documents, _SQL_SAMPLE_DOCUMENTS),
+    ("dsir_weights_documents", q_dsir_weights_documents, _SQL_DSIR_WEIGHTS),
+    ("dedup_exact_documents", q_dedup_exact_documents, _SQL_DEDUP_EXACT),
+    ("chunk_documents", q_chunk_documents, _SQL_CHUNK_DOCUMENTS),
+    ("gopher_quality_documents", q_gopher_quality, _SQL_GOPHER_QUALITY),
+    ("text_analysis_documents", q_text_analysis_documents, _SQL_TEXT_ANALYSIS),
+    ("pii_scrub_documents", q_pii_scrub_documents, _SQL_PII_SCRUB),
+    ("repetition_flags_documents", q_repetition_flags_documents,
+     _sql_repetition_flags()),
+    ("skew_hot_keys_lineitem", q_skew_hot_keys, _SQL_SKEW_HOT_KEYS),
+    ("schema_drift_log", q_schema_drift_log, _SQL_SCHEMA_DRIFT),
+    ("dupe_rows_part", q_dupe_rows_part, _SQL_DUPE_ROWS),
+    ("opq_query_embeddings", q_opq_query_embeddings, _SQL_OPQ_QUERY),
+    ("fs_em3_part", q_fs_em3_part, _SQL_FS_EM3_PART),
+    ("fs_em_part", q_fs_em_part, _SQL_FS_EM_PART),
+    ("record_linkage_part", q_record_linkage_part, _SQL_RECORD_LINKAGE_PART),
+    ("correlation_lineitem", q_correlation_lineitem,
+     _SQL_CORRELATION_LINEITEM),
+    ("profile_lineitem_numeric", q_profile_lineitem_numeric,
+     _sql_profile_numeric("lineitem", _LINEITEM_NUM_COLS)),
+    ("profile_customer_strings", q_profile_customer_strings,
+     _sql_profile_strings("customer", _CUSTOMER_STR_COLS)),
+    ("profile_sampled_lineitem", q_profile_sampled_lineitem,
+     _sql_profile_sampled_numeric(
+         "lineitem", "l_orderkey", _SAMPLED_NUM_COLS, 0.25, "r5")),
+    ("combo_match_customer_orders", q_combo_match_customer_orders,
+     _SQL_COMBO_MATCH),
+    ("verified_near_dups_documents", q_verified_near_dups_documents,
+     _sql_verified_near_dups()),
+    ("drilldown_dependent_lineitem", q_drilldown_dependent_lineitem,
+     _SQL_DRILLDOWN_DEPENDENT),
+    ("ann_lsh_topk", q_ann_lsh_topk, _sql_ann_lsh()),
+    ("bm25_topk_documents", q_bm25_topk_documents, _sql_bm25_topk()),
+    ("boilerplate_dedup_documents", q_boilerplate_dedup_documents,
+     _SQL_BOILERPLATE_DEDUP),
+    ("centroid_outliers_embeddings", q_centroid_outliers_embeddings,
+     _SQL_CENTROID_OUTLIERS),
+    ("contingency_rules_lineitem", q_contingency_rules_lineitem,
+     _sql_contingency("lineitem", _CONTINGENCY_COLS)),
+    ("corpus_report_documents", q_corpus_report_documents,
+     _sql_corpus_report()),
+    ("dedup_clusters_documents", q_dedup_clusters_documents,
+     _sql_dedup_clusters()),
+    ("dedup_keep_one_documents", q_dedup_keep_one_documents,
+     _sql_dedup_keep_one()),
+    ("distribution_shift_events", q_distribution_shift_events,
+     _SQL_DIST_SHIFT),
+    ("dsir_select_documents", q_dsir_select_documents, _SQL_DSIR_SELECT),
+    ("embedding_covariance_embeddings", q_embedding_covariance,
+     _SQL_EMB_COVARIANCE),
+    ("embedding_profile_embeddings", q_embedding_profile_embeddings,
+     _SQL_EMBEDDING_PROFILE),
+    ("frame_sample_documents", q_frame_sample_documents, _SQL_FRAME_SAMPLE),
+    ("freshness_threshold_events", q_freshness_threshold_events,
+     _SQL_FRESHNESS_THRESHOLD),
+    ("funnel_events", q_funnel_events, _SQL_FUNNEL),
+    ("gzip_corpus_documents", q_gzip_corpus_documents, _SQL_GZIP_CORPUS),
+    ("hard_negatives_embeddings", q_hard_negatives_embeddings,
+     _SQL_HARD_NEGATIVES),
+    ("ivfadc_topk_embeddings", q_ivfadc_topk_embeddings, _sql_ivfadc("TRUE")),
+    ("json_props_events", q_json_props_events, _SQL_JSON_PROPS),
+    ("minhash_lsh_documents", q_minhash_lsh_documents, _sql_minhash()),
+    ("pack_spans_documents", q_pack_spans_documents, _SQL_PACK_SPANS),
+    ("rerank_ivfadc_embeddings", q_rerank_ivfadc, _sql_rerank_ivfadc()),
+    ("resize_documents", q_resize_documents, _sql_resize_documents()),
+    ("retention_events", q_retention_events, _SQL_RETENTION),
+    ("rolling_features_events", q_rolling_features_events,
+     _SQL_ROLLING_FEATURES),
+    ("session_stats_events", q_session_stats_events, _SQL_SESSION_STATS),
+    ("shuffle_shards_documents", q_shuffle_shards_documents,
+     _SQL_SHUFFLE_SHARDS),
+    ("tfidf_keywords_documents", q_tfidf_keywords_documents,
+     _SQL_TFIDF_KEYWORDS),
+    ("benford_orders", q_benford_orders, _SQL_BENFORD_ORDERS),
+    ("profile_orders_dates", q_profile_orders_dates,
+     _sql_profile_dates("orders", "o_orderdate", RUN_DATE)),
+    ("bpe_merges_documents", q_bpe_merges_documents, _sql_bpe_merges()),
+    ("mixture_plan_documents", q_mixture_plan_documents, _SQL_MIXTURE_PLAN),
+    ("mixture_tokens_documents", q_mixture_tokens_documents,
+     _SQL_MIXTURE_TOKENS),
+]
+
+# The driver oracle-checks only the first 50 seats queries() returns.
+WINDOW = [
+    "group_dependence_lineitem", "multimodal_features_documents",
+    "ann_index_probe_embeddings", "bm25_index_probe_documents",
+    "minhash_index_probe_documents", "incremental_screen_orders",
+    "lr_quality_documents", "nb_classify_documents", "curation_gate_documents",
+    "simhash_documents", "dup_substrings_documents", "decontaminate_documents",
+    "anomaly_screen_orders", "anomaly_screen_customer_orders",
+    "functional_types_customer", "functional_types_orders",
+    "validation_prepass", "spearman_screen_lineitem",
+    "correlation_screen_lineitem", "fk_discovery_tpch", "spearman_lineitem",
+    "merged_profile_orders", "merged_profile_percentiles",
+    "merged_topfreq_orders", "score_breakdown_impact_co_li",
+    "score_breakdown_column_co_li", "score_breakdown_dimension_co_li",
+    "score_card_issues_co_li", "merge_defs_fixture", "cat_tests_lineitem",
+    "cat_tests_extended", "cat_tests_remaining", "aggregate_balance_orders",
+    "aggregate_balance_pct_orders", "aggregate_balance_range_orders",
+    "aggregate_minimum_orders", "timeframe_combo_events",
+    "timeframe_gain_events", "gen_constant_history", "drilldown_unique_orders",
+    "drilldown_min_val_lineitem", "drilldown_outlier_lineitem",
+    "drilldown_missing_days_events", "drilldown_aggregate_balance",
+    "semantic_dedup_embeddings", "asof_join_events", "asof_nearest_events",
+    "top_freq_orders", "top_patterns_part", "hybrid_search_documents",
+]
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the grading driver oracle-checks only the FIRST 50
-    # entries, so the head rotates each round to keep the hard correctness
-    # signal on the newest / least-verified operators (VERDICT r4 process
-    # finding). Long-stable queries (pytest-oracle-pinned at HEAD over ALL
-    # entries by tests/test_entry_oracle.py) take the tail seats.
-    return {
-        # --- r14 window, group A: the fixed 3-round-red dependence seat
-        # (HUGEINT oracle cast + ORDER BY) and the seats r13's structural
-        # rewrites touched but the r13 window could not verify (VERDICT
-        # r13 item 3): multimodal fusion, the persisted-index probes
-        # (single-pass signatures + claims-based append ids), incremental
-        # merge checkpoints, lr/nb/curation classify checkpoints, the
-        # ensure_parallelism text/dedup seats, the cascade screens and
-        # functional-type seats ---
-        "group_dependence_lineitem": q_group_dependence_lineitem,
-        "multimodal_features_documents": q_multimodal_features_documents,
-        "ann_index_probe_embeddings": q_ann_index_probe,
-        "bm25_index_probe_documents": q_bm25_index_probe_documents,
-        "minhash_index_probe_documents": q_minhash_index_probe,
-        "incremental_screen_orders": q_incremental_screen_orders,
-        "lr_quality_documents": q_lr_quality_documents,
-        "nb_classify_documents": q_nb_classify_documents,
-        "curation_gate_documents": q_curation_gate_documents,
-        "simhash_documents": q_simhash_documents,
-        "dup_substrings_documents": q_dup_substrings_documents,
-        "decontaminate_documents": q_decontaminate_documents,
-        "anomaly_screen_orders": q_anomaly_screen_orders,
-        "anomaly_screen_customer_orders": q_anomaly_screen,
-        "functional_types_customer": q_functional_types_customer,
-        "functional_types_orders": q_functional_types_orders,
-        "validation_prepass": q_validation_prepass,
-        # --- group B: seats r14's own changes touch (fused
-        # eligibility collect, fk refcount-gated dictionary
-        # checkpoints, merge agg-expression cache, removed
-        # double-checkpoints, score-family shared build) ---
-        "spearman_screen_lineitem": q_spearman_screen_lineitem,
-        "correlation_screen_lineitem": q_correlation_screen_lineitem,
-        "fk_discovery_tpch": q_fk_discovery_tpch,
-        "spearman_lineitem": q_spearman_lineitem,
-        "merged_profile_orders": q_merged_profile_orders,
-        "merged_profile_percentiles": q_merged_profile_percentiles,
-        "merged_topfreq_orders": q_merged_topfreq_orders,
-        "score_breakdown_impact_co_li": q_score_breakdown_impact,
-        "score_breakdown_column_co_li": q_score_breakdown_cols,
-        "score_breakdown_dimension_co_li": q_score_breakdown_dims,
-        "score_card_issues_co_li": q_score_card_issues,
-        "merge_defs_fixture": q_merge_defs_fixture,
-        # --- group C: the longest-unchecked r11-green block
-        # (CAT tests / aggregate / timeframe / drilldown /
-        # asof / generation), next-in-line per the r13 note ---
-        "cat_tests_lineitem": q_cat_tests_lineitem,
-        "cat_tests_extended": q_cat_tests_extended,
-        "cat_tests_remaining": q_cat_tests_remaining,
-        "aggregate_balance_orders": q_aggregate_balance_orders,
-        "aggregate_balance_pct_orders": q_aggregate_balance_pct,
-        "aggregate_balance_range_orders": q_aggregate_balance_range,
-        "aggregate_minimum_orders": q_aggregate_minimum,
-        "timeframe_combo_events": q_timeframe_combo_events,
-        "timeframe_gain_events": q_timeframe_combo_gain,
-        "gen_constant_history": q_gen_constant_history,
-        "drilldown_unique_orders": q_drilldown_unique_orders,
-        "drilldown_min_val_lineitem": q_drilldown_min_val_lineitem,
-        "drilldown_outlier_lineitem": q_drilldown_outlier_lineitem,
-        "drilldown_missing_days_events": q_drilldown_missing_days_events,
-        "drilldown_aggregate_balance": q_drilldown_aggregate_balance,
-        "semantic_dedup_embeddings": q_semantic_dedup_embeddings,
-        "asof_join_events": q_asof_join_events,
-        "asof_nearest_events": q_asof_nearest_events,
-        "top_freq_orders": q_top_freq_orders,
-        "top_patterns_part": q_top_patterns_part,
-        "hybrid_search_documents": q_hybrid_search_documents,
-        # ---- tail (seat 51+): pytest-oracle-pinned every
-        # round; every tail seat carried a green driver hash
-        # row in r11-r13 (see CORRECTNESS_r{11,12,13}.json).
-        # Next in line for r15: the r12/r13-green LM / ANN /
-        # text / events families below. ----
-        "ref_orphans_events": q_ref_orphans_events,
-        "drilldown_masked_customer": q_drilldown_masked_customer,
-        "bigram_lm_documents": q_bigram_lm_documents,
-        "trigram_lm_documents": q_trigram_lm_documents,
-        "ngram_lm_documents": q_ngram_lm_documents,
-        "kmeans_embeddings": q_kmeans_embeddings,
-        "fuzzy_pairs_part": q_fuzzy_pairs_part,
-        "generated_tests_lineitem": q_generated_tests,
-        "generated_test_keys_lineitem": q_generated_test_keys,
-        "score_category_fixture": q_score_category,
-        "score_overall_history_fixture": q_score_overall_history,
-        "embedding_cosine_pairs": q_embedding_cosine_pairs,
-        "ann_topk_embeddings": q_ann_topk_embeddings,
-        "ivf_topk_embeddings": q_ivf_topk_embeddings,
-        "pq_topk_embeddings": q_pq_topk_embeddings,
-        "unigram_logprob_documents": q_unigram_logprob_documents,
-        "c4_clean_documents": q_c4_clean_documents,
-        "sample_documents": q_sample_documents,
-        "dsir_weights_documents": q_dsir_weights_documents,
-        "dedup_exact_documents": q_dedup_exact_documents,
-        "chunk_documents": q_chunk_documents,
-        "gopher_quality_documents": q_gopher_quality,
-        "text_analysis_documents": q_text_analysis_documents,
-        "pii_scrub_documents": q_pii_scrub_documents,
-        "repetition_flags_documents": q_repetition_flags_documents,
-        "skew_hot_keys_lineitem": q_skew_hot_keys,
-        "schema_drift_log": q_schema_drift_log,
-        "dupe_rows_part": q_dupe_rows_part,
-        "opq_query_embeddings": q_opq_query_embeddings,
-        "fs_em3_part": q_fs_em3_part,
-        "fs_em_part": q_fs_em_part,
-        "record_linkage_part": q_record_linkage_part,
-        "correlation_lineitem": q_correlation_lineitem,
-        "profile_lineitem_numeric": q_profile_lineitem_numeric,
-        "profile_customer_strings": q_profile_customer_strings,
-        "profile_sampled_lineitem": q_profile_sampled_lineitem,
-        "combo_match_customer_orders": q_combo_match_customer_orders,
-        "verified_near_dups_documents": q_verified_near_dups_documents,
-        "drilldown_dependent_lineitem": q_drilldown_dependent_lineitem,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "bm25_topk_documents": q_bm25_topk_documents,
-        "boilerplate_dedup_documents": q_boilerplate_dedup_documents,
-        "centroid_outliers_embeddings": q_centroid_outliers_embeddings,
-        "contingency_rules_lineitem": q_contingency_rules_lineitem,
-        "corpus_report_documents": q_corpus_report_documents,
-        "dedup_clusters_documents": q_dedup_clusters_documents,
-        "dedup_keep_one_documents": q_dedup_keep_one_documents,
-        "distribution_shift_events": q_distribution_shift_events,
-        "dsir_select_documents": q_dsir_select_documents,
-        "embedding_covariance_embeddings": q_embedding_covariance,
-        "embedding_profile_embeddings": q_embedding_profile_embeddings,
-        "frame_sample_documents": q_frame_sample_documents,
-        "freshness_threshold_events": q_freshness_threshold_events,
-        "funnel_events": q_funnel_events,
-        "gzip_corpus_documents": q_gzip_corpus_documents,
-        "hard_negatives_embeddings": q_hard_negatives_embeddings,
-        "ivfadc_topk_embeddings": q_ivfadc_topk_embeddings,
-        "json_props_events": q_json_props_events,
-        "minhash_lsh_documents": q_minhash_lsh_documents,
-        "pack_spans_documents": q_pack_spans_documents,
-        "rerank_ivfadc_embeddings": q_rerank_ivfadc,
-        "resize_documents": q_resize_documents,
-        "retention_events": q_retention_events,
-        "rolling_features_events": q_rolling_features_events,
-        "session_stats_events": q_session_stats_events,
-        "shuffle_shards_documents": q_shuffle_shards_documents,
-        "tfidf_keywords_documents": q_tfidf_keywords_documents,
-        "benford_orders": q_benford_orders,
-        "profile_orders_dates": q_profile_orders_dates,
-        "bpe_merges_documents": q_bpe_merges_documents,
-        "mixture_plan_documents": q_mixture_plan_documents,
-        "mixture_tokens_documents": q_mixture_tokens_documents,
-    }
+    """name -> (spark, sf_dir) builder: the WINDOW seats first, then the
+    rest in SEATS order."""
+    fns = {name: fn for name, fn, _ in SEATS}
+    return {**{name: fns[name] for name in WINDOW}, **fns}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "ngram_lm_documents": _SQL_NGRAM_LM,
-        "kmeans_embeddings": _SQL_KMEANS,
-        "lr_quality_documents": _SQL_LR_QUALITY,
-        "embedding_covariance_embeddings": _SQL_EMB_COVARIANCE,
-        "benford_orders": _SQL_BENFORD_ORDERS,
-        "fuzzy_pairs_part": _SQL_FUZZY_PAIRS_PART,
-        "record_linkage_part": _SQL_RECORD_LINKAGE_PART,
-        "fs_em_part": _SQL_FS_EM_PART,
-        "fs_em3_part": _SQL_FS_EM3_PART,
-        "correlation_lineitem": _SQL_CORRELATION_LINEITEM,
-        "spearman_lineitem": _SQL_SPEARMAN_LINEITEM,
-        "group_dependence_lineitem": _SQL_GROUP_DEPENDENCE,
-        "correlation_screen_lineitem": ORC.anomaly_screen_multi_sql(
-            [("lineitem_m", _LINEITEM_M_COLS)], RUN_DATE,
-            corr_tables=[("lineitem_m", _LINEITEM_M_COLS)],
-            pre_ctes=[("lineitem_m", _LINEITEM_M_SQL)]),
-        "spearman_screen_lineitem": ORC.anomaly_screen_multi_sql(
-            [("lineitem_sp", _LINEITEM_SP_COLS)], RUN_DATE,
-            corr_tables=[("lineitem_sp", _LINEITEM_SP_COLS)],
-            pre_ctes=[("lineitem_sp", _LINEITEM_SP_SQL)],
-            spearman=True),
-        "drilldown_dependent_lineitem": _SQL_DRILLDOWN_DEPENDENT,
-        "fk_discovery_tpch": _SQL_FK_DISCOVERY,
-        "nb_classify_documents": _sql_nb_classify(),
-        "curation_gate_documents": _sql_curation_gate(),
-        "session_stats_events": _SQL_SESSION_STATS,
-        "rolling_features_events": _SQL_ROLLING_FEATURES,
-        "funnel_events": _SQL_FUNNEL,
-        "ref_orphans_events": _SQL_REF_ORPHANS,
-        "shuffle_shards_documents": _SQL_SHUFFLE_SHARDS,
-        "bm25_index_probe_documents": _sql_bm25_topk(),
-        "hard_negatives_embeddings": _SQL_HARD_NEGATIVES,
-        "embedding_profile_embeddings": _SQL_EMBEDDING_PROFILE,
-        "bm25_topk_documents": _sql_bm25_topk(),
-        "ivfadc_topk_embeddings": _sql_ivfadc("TRUE"),
-        "ann_index_probe_embeddings": _sql_ivfadc("b.vec_id % 2 = 0"),
-        "rerank_ivfadc_embeddings": _sql_rerank_ivfadc(),
-        "resize_documents": _sql_resize_documents(),
-        "frame_sample_documents": _SQL_FRAME_SAMPLE,
-        "profile_sampled_lineitem": _sql_profile_sampled_numeric(
-            "lineitem", "l_orderkey", _SAMPLED_NUM_COLS, 0.25, "r5"),
-        "freshness_threshold_events": _SQL_FRESHNESS_THRESHOLD,
-        "validation_prepass": _SQL_VALIDATION_PREPASS,
-        "incremental_screen_orders": ORC.anomaly_screen_sql(
-            "orders", _ORDERS_COLS, RUN_DATE),
-        "dsir_weights_documents": _SQL_DSIR_WEIGHTS,
-        "dsir_select_documents": _SQL_DSIR_SELECT,
-        "minhash_index_probe_documents": _sql_minhash_index_probe(),
-        "pq_topk_embeddings": _SQL_PQ_TOPK,
-        "opq_query_embeddings": _SQL_OPQ_QUERY,
-        "profile_lineitem_numeric": _sql_profile_numeric("lineitem", _LINEITEM_NUM_COLS),
-        "profile_customer_strings": _sql_profile_strings("customer", _CUSTOMER_STR_COLS),
-        "profile_orders_dates": _sql_profile_dates("orders", "o_orderdate", RUN_DATE),
-        "top_freq_orders": _sql_top_freq("orders", ["o_orderstatus", "o_orderpriority"]),
-        "top_patterns_part": _sql_top_patterns("part", ["p_brand", "p_type", "p_name"]),
-        "functional_types_customer": ORC.functional_types_sql(
-            "customer", _CUSTOMER_COLS, RUN_DATE),
-        "functional_types_orders": ORC.functional_types_sql(
-            "orders", _ORDERS_COLS, RUN_DATE),
-        "generated_test_keys_lineitem": ORC.generated_test_keys_sql(
-            "lineitem", _LINEITEM_COLS_SPEC, RUN_DATE),
-        "generated_tests_lineitem": ORC.generated_test_params_sql(
-            "lineitem", _LINEITEM_COLS_SPEC, RUN_DATE),
-        "anomaly_screen_orders": ORC.anomaly_screen_sql(
-            "orders", _ORDERS_COLS, RUN_DATE),
-        "anomaly_screen_customer_orders": ORC.anomaly_screen_multi_sql(
-            [("customer", _CUSTOMER_COLS), ("orders", _ORDERS_COLS)], RUN_DATE,
-            corr_tables=_SCORE_TABLES()),
-        "cat_tests_lineitem": _sql_cat_tests(),
-        "cat_tests_extended": _sql_cat_tests_extended(),
-        "cat_tests_remaining": _sql_cat_tests_remaining(),
-        "aggregate_balance_range_orders": _SQL_AGG_BALANCE_RANGE,
-        "aggregate_minimum_orders": _SQL_AGG_MINIMUM,
-        "timeframe_gain_events": _SQL_TIMEFRAME_GAIN,
-        "dupe_rows_part": _SQL_DUPE_ROWS,
-        "combo_match_customer_orders": _SQL_COMBO_MATCH,
-        "aggregate_balance_orders": _SQL_AGG_BALANCE,
-        "aggregate_balance_pct_orders": _SQL_AGG_BALANCE_PCT,
-        "contingency_rules_lineitem": _sql_contingency("lineitem", _CONTINGENCY_COLS),
-        "timeframe_combo_events": _SQL_TIMEFRAME,
-        "distribution_shift_events": _SQL_DIST_SHIFT,
-        "text_analysis_documents": _SQL_TEXT_ANALYSIS,
-        "dedup_exact_documents": _SQL_DEDUP_EXACT,
-        "minhash_lsh_documents": _sql_minhash(),
-        "dedup_clusters_documents": _sql_dedup_clusters(),
-        "dedup_keep_one_documents": _sql_dedup_keep_one(),
-        "simhash_documents": _sql_simhash(),
-        "embedding_cosine_pairs": _SQL_COSINE_PAIRS,
-        "ann_topk_embeddings": _SQL_ANN_TOPK,
-        "ann_lsh_topk": _sql_ann_lsh(),
-        "ivf_topk_embeddings": _SQL_IVF_TOPK,
-        "multimodal_features_documents": _SQL_MULTIMODAL,
-        "score_breakdown_column_co_li": ORC.score_card_breakdown_cols_sql(
-            _SCORE_TABLES(), RUN_DATE, _score_test_selects(),
-            corr_tables=_SCORE_TABLES()),
-        "score_breakdown_dimension_co_li": ORC.score_card_breakdown_dim_sql(
-            _SCORE_TABLES(), RUN_DATE, _score_test_selects(),
-            which="dq_dimension", corr_tables=_SCORE_TABLES()),
-        "score_breakdown_impact_co_li": ORC.score_card_breakdown_dim_sql(
-            _SCORE_TABLES(), RUN_DATE, _score_test_selects(),
-            which="impact_dimension", corr_tables=_SCORE_TABLES()),
-        "score_card_issues_co_li": ORC.score_card_issues_sql(
-            _SCORE_TABLES(), RUN_DATE, _score_test_selects(),
-            corr_tables=_SCORE_TABLES()),
-        "drilldown_unique_orders": _SQL_DRILLDOWN_UNIQUE,
-        "drilldown_min_val_lineitem": _SQL_DRILLDOWN_MIN_VAL,
-        "drilldown_masked_customer": _SQL_DRILLDOWN_MASKED,
-        "drilldown_outlier_lineitem": _SQL_DRILLDOWN_OUTLIER,
-        "drilldown_missing_days_events": _SQL_DRILLDOWN_MISSING_DAYS,
-        "drilldown_aggregate_balance": _SQL_DRILLDOWN_AGG_BALANCE,
-        "gen_constant_history": _sql_gen_constant_history(),
-        "schema_drift_log": _SQL_SCHEMA_DRIFT,
-        "score_category_fixture": _sql_score_category(),
-        "score_overall_history_fixture": _sql_score_overall_history(),
-        "merge_defs_fixture": _sql_merge_defs(),
-        "skew_hot_keys_lineitem": _SQL_SKEW_HOT_KEYS,
-        "chunk_documents": _SQL_CHUNK_DOCUMENTS,
-        "sample_documents": _SQL_SAMPLE_DOCUMENTS,
-        "gopher_quality_documents": _SQL_GOPHER_QUALITY,
-        "pii_scrub_documents": _SQL_PII_SCRUB,
-        "repetition_flags_documents": _sql_repetition_flags(),
-        "semantic_dedup_embeddings": _SQL_SEMANTIC_DEDUP,
-        "decontaminate_documents": _SQL_DECONTAMINATE,
-        "c4_clean_documents": _SQL_C4_CLEAN,
-        "unigram_logprob_documents": _SQL_UNIGRAM_LOGPROB,
-        "bigram_lm_documents": _SQL_BIGRAM_LM,
-        "mixture_plan_documents": _SQL_MIXTURE_PLAN,
-        "asof_join_events": _SQL_ASOF_JOIN,
-        "asof_nearest_events": _SQL_ASOF_NEAREST,
-        "gzip_corpus_documents": _SQL_GZIP_CORPUS,
-        "mixture_tokens_documents": _SQL_MIXTURE_TOKENS,
-        "boilerplate_dedup_documents": _SQL_BOILERPLATE_DEDUP,
-        "merged_profile_orders": _sql_profile_numeric_mergeable(
-            "orders", _MERGE_NUM_COLS),
-        "merged_profile_percentiles": _sql_merged_percentiles(
-            "orders", _MERGE_NUM_COLS),
-        "merged_topfreq_orders": _sql_merged_topfreq(
-            "orders", _MERGE_STR_COLS),
-        "dup_substrings_documents": _SQL_DUP_SUBSTRINGS,
-        "pack_spans_documents": _SQL_PACK_SPANS,
-        "centroid_outliers_embeddings": _SQL_CENTROID_OUTLIERS,
-        "tfidf_keywords_documents": _SQL_TFIDF_KEYWORDS,
-        "corpus_report_documents": _sql_corpus_report(),
-        "bpe_merges_documents": _sql_bpe_merges(),
-        "trigram_lm_documents": _SQL_TRIGRAM_LM,
-        "verified_near_dups_documents": _sql_verified_near_dups(),
-        "hybrid_search_documents": _sql_hybrid_search(),
-        "json_props_events": _SQL_JSON_PROPS,
-        "retention_events": _SQL_RETENTION,
-    }
+    return {name: sql for name, _, sql in SEATS}

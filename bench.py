@@ -1,126 +1,189 @@
-"""Benchmark harness: times every queries() entry from __spark_entry__ at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and prints ONE JSON line.
+"""Benchmark harness for the __spark_entry__ seats at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data, see TESTDATA.md).
+
+  python bench.py
+      times every seat once, in sorted name order, prints ONE JSON line and
+      mirrors it to BENCH_FULL.json.
+  python bench.py --only NAME [NAME ...] [--reps N] [--explain DIR]
+      probe mode: times the named seats N times each (default 3), prints
+      one JSON line {name: [rep seconds]} and leaves BENCH_FULL.json alone.
+      --explain writes explain("formatted") plus the last rep's Catalyst
+      phase timings to DIR/<name>.txt.
+
+Both modes run the same warmup first, so timings measure the seats.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import io
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
+def warm(spark, sf_dir: str) -> float | None:
+    """Pay the session's one-time costs before any seat is timed, the way a
+    JVM benchmark excludes JIT warmup. Returns the seconds the shared
+    profile + inference build took, or None if it failed."""
     import __spark_entry__ as entry_mod
-    from dataops_testgen_spark.session import get_spark
-
-    spark = get_spark("bench")
-
-    # Warm the JVM once so per-query timings measure the queries, not
-    # one-time session costs: the first codegen'd job in a fresh JVM also
-    # pays Janino/Catalyst class loading and C2-compiling the code
-    # generator itself (measured 17 s isolated vs 37-54 s as bench's first
-    # query, r3 VERDICT).  This tiny representative agg touches every
-    # physical path the real queries use — HashAggregate codegen, regex,
-    # timestamp parsing, Expand (countDistinct), ObjectHashAggregate
-    # (percentile), sort, broadcast join, parquet scan — and is excluded
-    # from the timings, exactly like JIT warmup in any JVM benchmark.
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
-    warm = spark.range(2000).select(
+
+    # JIT: the first codegen'd job in a fresh JVM also pays Janino/Catalyst
+    # class loading and C2-compiling the code generator (17 s alone vs
+    # 37-54 s as the first seat). This agg touches the physical paths the
+    # seats use: HashAggregate codegen, regex, timestamp parsing, Expand
+    # (countDistinct), ObjectHashAggregate (percentile), sort, broadcast
+    # join and parquet scan.
+    df = spark.range(2000).select(
         F.col("id"),
         F.concat(F.lit("v"), F.col("id").cast("string")).alias("s"),
         (F.col("id") % 7).alias("k"))
-    warm.agg(
+    df.agg(
         F.sum(F.when(F.col("s").rlike("[0-9]$"), 1).otherwise(0)),
         F.countDistinct("k"), F.countDistinct("s"),
         F.percentile(F.col("id").cast("double"), F.lit([0.25, 0.5, 0.75])),
         F.min(F.try_to_timestamp(F.col("s"), F.lit("yyyy-MM-dd"))),
         F.max(F.md5(F.col("s"))),
     ).collect()
-    w2 = warm.groupBy("k").agg(F.count(F.lit(1)).alias("ct"))
-    w2.join(F.broadcast(w2.select(F.col("k").alias("k2"))),
-            F.col("k") == F.col("k2")).orderBy("k").collect()
-    sf_probe = os.path.join(sf_dir, "region.parquet")
-    if os.path.exists(sf_probe):
-        spark.read.parquet(sf_probe).count()
+    g = df.groupBy("k").agg(F.count(F.lit(1)).alias("ct"))
+    g.join(F.broadcast(g.select(F.col("k").alias("k2"))),
+           F.col("k") == F.col("k2")).orderBy("k").collect()
+    region = os.path.join(sf_dir, "region.parquet")
+    if os.path.exists(region):
+        spark.read.parquet(region).count()
 
-    # Python-worker warmup (r13): MapInPandas/ArrowEvalPython is the one
-    # physical path the block above does not touch. A fresh session pays
-    # one fork + `import pandas/numpy` per worker (~1 s each, all
-    # concurrent) the FIRST time any python stage runs — measured 29 s
-    # on the first python-heavy query at 32 cores, pure session cold
-    # start misattributed to whichever query runs first (workers are
-    # reused afterwards, exactly like a long-lived cluster). Fork the
-    # pool and import once, same discipline as the JIT warmup.
+    # Python workers: the first MapInPandas/ArrowEvalPython stage forks one
+    # worker per core and imports pandas/numpy in each (29 s on the first
+    # python-heavy seat at 32 cores). Workers are reused afterwards.
     def _warm_workers(batches):
         import numpy  # noqa: F401
         import pandas  # noqa: F401
-        for b in batches:
-            yield b
+        yield from batches
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
     (spark.range(cpus * 4).repartition(cpus)
      .mapInPandas(_warm_workers, "id long").count())
 
-    # Operator-class warmup (r14): the r14 window rotation moved the heavy
-    # cascade/index seats to the FRONT of the run, and a cross-process A/B
-    # vs the r13 ordering showed a pure POSITION tax (+0.5-3 s on each
-    # early heavy seat, the same seconds back off the late seats; per-query
-    # geomean 0.995 — code-neutral). The cold classes the original warmup
-    # does not touch: WindowExec codegen, GenerateExec (explode), the
-    # parquet write committer + dynamic partition overwrite machinery, and
-    # HLL sketch codegen. Touch each once so seat timings measure the
-    # queries, not whichever seat happens to run first — the same declared
-    # discipline as the JIT/python-worker warmups above.
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window as _W
-    wdf = spark.range(200).select((F.col("id") % 5).alias("k"),
-                                  F.col("id").alias("v"))
-    wdf.select(F.row_number().over(
-        _W.partitionBy("k").orderBy("v")).alias("rn")).agg(
+    # Operator classes the block above leaves cold: WindowExec codegen,
+    # GenerateExec (explode), HLL sketch codegen, and the parquet write
+    # committer with dynamic partition overwrite. Cold, they add 0.5-3 s to
+    # whichever heavy seat runs first.
+    w = spark.range(200).select((F.col("id") % 5).alias("k"),
+                                F.col("id").alias("v"))
+    w.select(F.row_number().over(
+        Window.partitionBy("k").orderBy("v")).alias("rn")).agg(
         F.max("rn"), F.hll_sketch_estimate(F.hll_sketch_agg("rn"))).collect()
-    wdf.select(F.explode(F.array(F.col("v"), F.col("v") + 1))).count()
-    wtmp = tempfile.mkdtemp(prefix="bench_warm_")
+    w.select(F.explode(F.array(F.col("v"), F.col("v") + 1))).count()
+    tmp = tempfile.mkdtemp(prefix="bench_warm_")
     try:
-        (wdf.write.mode("overwrite")
+        (w.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("k").parquet(wtmp + "/w"))
-        spark.read.parquet(wtmp + "/w").count()
+         .partitionBy("k").parquet(tmp + "/w"))
+        spark.read.parquet(tmp + "/w").count()
     finally:
-        shutil.rmtree(wtmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
-    # Charge the SHARED profile + inference-cascade compile (memoized in
-    # __spark_entry__._inferred and reused by ~15 queries) to its own
-    # warm-up line instead of whichever consumer happens to run first.
-    # Without this, rotation of the query dict moves a ~10-25 s one-time
-    # cost onto a different query each round (r5 VERDICT: identical code
-    # measured 19.9->32.5 s on anomaly_screen_customer_orders), hiding
-    # real regressions. The per-query numbers below measure the queries.
+    # The shared profile + inference build (memoized, reused by ~15 seats)
+    # is charged to its own figure instead of to whichever consumer runs
+    # first, where it moved 10-25 s between seats.
     t0 = time.perf_counter()
     try:
         entry_mod._inferred(spark, sf_dir, *entry_mod._UNION_TABLES).count()
-        warmup_shared = round(time.perf_counter() - t0, 3)
-    except Exception:
-        warmup_shared = None
+    except Exception as exc:  # noqa: BLE001 — the seats still get timed
+        print(f"# warmup_shared failed: {exc!r}", file=sys.stderr)
+        return None
+    return round(time.perf_counter() - t0, 3)
+
+
+def _explain(df, path: str) -> None:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    phases = []
+    it = df._jdf.queryExecution().tracker().phases().iterator()
+    while it.hasNext():
+        kv = it.next()
+        phases.append((kv._2().startTimeMs(), kv._2().endTimeMs(), kv._1()))
+    for start, end, name in sorted(phases):
+        buf.write(f"phase {name}: {end - start} ms\n")
+    with open(path, "w") as fh:
+        fh.write(buf.getvalue())
+
+
+def probe(spark, sf_dir: str, seats: dict, names: list[str], reps: int,
+          explain_dir: str | None) -> dict[str, list[float]]:
+    sc = spark.sparkContext
+    results = {}
+    for name in names:
+        times = []
+        for rep in range(reps):
+            sc.setJobDescription(f"{name}#{rep}")
+            t0 = time.perf_counter()
+            df = seats[name](spark, sf_dir)
+            df.count()
+            times.append(round(time.perf_counter() - t0, 3))
+        sc.setJobDescription(None)
+        results[name] = times
+        print(f"# {name}: {times}", file=sys.stderr)
+        if explain_dir:
+            os.makedirs(explain_dir, exist_ok=True)
+            _explain(df, os.path.join(explain_dir, f"{name}.txt"))
+    return results
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--only", nargs="+", metavar="NAME",
+                    help="probe mode: time only these seats")
+    ap.add_argument("--reps", type=int, default=3,
+                    help="probe mode: timed runs per seat (default 3)")
+    ap.add_argument("--explain", metavar="DIR",
+                    help="probe mode: write DIR/<name>.txt plans")
+    args = ap.parse_args(argv)
+
+    import __spark_entry__ as entry_mod
+
+    seats = entry_mod.queries()
+    if args.only:
+        unknown = [n for n in args.only if n not in seats]
+        if unknown:
+            ap.error(f"unknown seat(s): {', '.join(unknown)}")
+        if args.reps < 1:
+            ap.error("--reps must be at least 1")
+    elif args.explain:
+        ap.error("--explain needs --only")
+
+    from dataops_testgen_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("bench")
+    warmup_shared = warm(spark, sf_dir)
+    print(f"# warmup_shared: {warmup_shared}s", file=sys.stderr)
+
+    if args.only:
+        print(json.dumps(probe(spark, sf_dir, seats, args.only, args.reps,
+                               args.explain)))
+        return
 
     timings: dict[str, float] = {}
     total = 0.0
-    for name, fn in entry_mod.queries().items():
+    for name in sorted(seats):
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        n = df.count()
+        n = seats[name](spark, sf_dir).count()
         dt = time.perf_counter() - t0
         timings[name] = round(dt, 3)
         total += dt
         print(f"# {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
 
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     line = json.dumps({
         "metric": "total_query_seconds",
         "value": round(total, 3),
@@ -129,10 +192,8 @@ def main() -> None:
         "warmup_shared_sec": warmup_shared,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     })
-    # The driver captures only ~2000 chars of stdout, but 105 query names
-    # alone exceed that — mirror the full line to a file so every
-    # per-query timing stays auditable (judge ADVICE r6-r8: BENCH tails
-    # truncate with parsed:null).
+    # stdout readers may keep only the first ~2000 chars, which 122 seat
+    # names exceed: BENCH_FULL.json keeps every per-seat timing.
     full = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "BENCH_FULL.json")
     with open(full, "w") as fh:

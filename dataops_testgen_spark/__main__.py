@@ -465,28 +465,29 @@ def cmd_run_monitors(args) -> int:
     store = _store(spark, args) if args.store else None
     mon_suite = args.test_suite + "_monitors"
 
-    def _history(test_id):
-        """(times, values) of past measures + last message for test_id."""
+    def _histories() -> dict:
+        """test_id -> past monitor result rows, oldest first; read once
+        per cycle."""
         if store is None:
-            return [], [], None
+            return {}
         res = store.read("test_results")
         runs = store.read("test_runs")
         if res is None or runs is None:
-            return [], [], None
-        rows = (res.filter((F.col("test_id") == test_id)
-                           & (F.col("test_suite_key") == mon_suite))
+            return {}
+        rows = (res.filter(F.col("test_suite_key") == mon_suite)
                 .join(runs.select("test_run_id", "test_starttime"),
                       "test_run_id")
-                .select("test_starttime", "result_measure",
+                .select("test_id", "test_starttime", "result_measure",
                         "result_message")
                 .orderBy("test_starttime").collect())
-        return ([r["test_starttime"] for r in rows],
-                [r["result_measure"] for r in rows],
-                rows[-1]["result_message"] if rows else None)
+        out: dict = {}
+        for r in rows:
+            out.setdefault(r["test_id"], []).append(r)
+        return out
 
-    def _volume_result(name, n):
-        times, values, _ = _history(f"mon_volume_{name}")
-        pairs = [(t, v) for t, v in zip(times, values) if v is not None]
+    def _volume_result(history, n):
+        pairs = [(r["test_starttime"], r["result_measure"]) for r in history
+                 if r["result_measure"] is not None]
         if len(pairs) >= 20:     # forecast.MIN_TRAIN_VALUES
             import pandas as pd
 
@@ -508,13 +509,14 @@ def cmd_run_monitors(args) -> int:
 
     def one_cycle() -> list[dict]:
         results = []
+        histories = _histories()
         for name, df in tables.items():
             n = df.count()
             fp_cols = df.columns[: min(4, len(df.columns))]
             fp = table_fingerprint(
                 df, [F.count(F.lit(1))]
                 + [F.max(c).cast("string") for c in fp_cols])
-            vol = _volume_result(name, n)
+            vol = _volume_result(histories.get(f"mon_volume_{name}", []), n)
             results.append({"test_id": f"mon_volume_{name}",
                             "test_type": "Volume_Trend", "table_name": name,
                             "column_name": None,
@@ -523,7 +525,8 @@ def cmd_run_monitors(args) -> int:
                             "result_message": None,
                             "result_measure": float(n),
                             "threshold_value": vol["threshold_value"]})
-            _, _, prev_fp = _history(f"mon_freshness_{name}")
+            fresh = histories.get(f"mon_freshness_{name}")
+            prev_fp = fresh[-1]["result_message"] if fresh else None
             changed = (None if prev_fp is None
                        else ("Change detected" if fp != prev_fp
                              else "No change"))

@@ -67,6 +67,25 @@ def _parallel_plan(items, nworkers):
     return [b[1] for b in bins if b[1]]
 
 
+# Per worker JVM, beyond its heap: metaspace, code cache, direct buffers,
+# its Python workers and the pytest process that drives it.
+_OFFHEAP_MB = 2048
+
+
+def worker_heap(nworkers, meminfo="/proc/meminfo"):
+    """spark.driver.memory for each of nworkers worker JVMs: MemAvailable
+    split across them, less _OFFHEAP_MB each, capped at 10g (floor 1g).
+    Without a readable meminfo, 10g."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(line.split()[1]) for line in fh
+                      if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "10g"
+    mb = kb // 1024 // nworkers - _OFFHEAP_MB
+    return f"{max(1024, min(10 * 1024, mb))}m"
+
+
 def worker_tally(returncode, junit_path):
     """(passed, failed, errors) of one worker pytest run, read from its junit
     xml. Fails closed: a missing or unreadable file is one error, and a
@@ -97,6 +116,7 @@ def pytest_runtestloop(session):
     nworkers = max(2, min(5, cpus // 6))
     worker_cpus = max(6, cpus // nworkers)
     plan = _parallel_plan(session.items, nworkers)
+    heap = worker_heap(len(plan))
     tw = config.pluginmanager.get_plugin("terminalreporter")
 
     def say(msg):
@@ -107,7 +127,9 @@ def pytest_runtestloop(session):
 
     say(f"parallel suite runner: {len(session.items)} tests, "
         f"{sum(len(p) for p in plan)} files -> {len(plan)} workers "
-        f"(local[{worker_cpus}] each); TG_TESTS_SERIAL=1 disables")
+        f"(local[{worker_cpus}], driver memory "
+        f"{os.environ.get('SPARK_DRIVER_MEMORY', heap)} each); "
+        "TG_TESTS_SERIAL=1 disables")
     t0 = time.time()
     junit_dir = tempfile.mkdtemp(prefix="tg_par_junit_")
     procs = []
@@ -115,7 +137,7 @@ def pytest_runtestloop(session):
         env = dict(os.environ)
         env[_PAR_WORKER_ENV] = str(i)
         env["SPARK_GRAFT_CPUS"] = str(worker_cpus)
-        env.setdefault("SPARK_DRIVER_MEMORY", "10g")
+        env.setdefault("SPARK_DRIVER_MEMORY", heap)
         cmd = [sys.executable, "-m", "pytest", "-q",
                f"--basetemp=/tmp/tg_par_tmp_{os.getpid()}_{i}",
                f"--junitxml={junit_dir}/worker{i}.xml"]

@@ -222,6 +222,31 @@ def test_run_monitors_store_and_freshness(tmp_path, spark, capsys):
     assert vol and all(r["result"] == "Log" for r in vol)
 
 
+def test_run_monitors_reads_history_once_per_cycle(tmp_path, spark,
+                                                   monkeypatch):
+    """One run-monitors cycle over two tables reads test_results and
+    test_runs once each, not once per monitor test."""
+    data_dir = str(tmp_path / "data")
+    for t in ("a", "b"):
+        spark.range(10).toDF("v").coalesce(1).write.parquet(
+            os.path.join(data_dir, f"{t}.parquet"))
+    reads = []
+    real_read = RunStore.read
+
+    def counting_read(self, table):
+        reads.append(table)
+        return real_read(self, table)
+
+    monkeypatch.setattr(RunStore, "read", counting_read)
+    store_dir = str(tmp_path / "store")
+    for _ in range(2):      # empty store, then one stored cycle
+        reads.clear()
+        assert main(["run-monitors", "--data-dir", data_dir,
+                     "--store", store_dir, "--test-suite", "mon",
+                     "--csv-dir", str(tmp_path)]) == 0
+        assert sorted(reads) == ["test_results", "test_runs"]
+
+
 def test_run_monitors_volume_thresholds(tmp_path, spark):
     """With >=20 stored cycles of volume history, Volume_Trend is
     evaluated against ARIMA-predicted tolerances: a steady series passes,

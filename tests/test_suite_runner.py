@@ -1,7 +1,8 @@
-"""The parallel suite runner's per-worker tally (conftest.worker_tally)
-fails closed."""
+"""The parallel suite runner: its per-worker tally (conftest.worker_tally)
+fails closed, and its worker heaps (conftest.worker_heap) fit the memory
+available."""
 
-from conftest import worker_tally
+from conftest import worker_heap, worker_tally
 
 _ALL_PASS = """<?xml version="1.0" encoding="utf-8"?>
 <testsuites><testsuite name="pytest" errors="0" failures="0" skipped="0"
@@ -41,3 +42,17 @@ def test_missing_junit_file_is_a_failure(tmp_path):
 
 def test_truncated_junit_file_is_a_failure(tmp_path):
     assert worker_tally(0, _junit(tmp_path, _ALL_PASS[:60])) == (0, 0, 1)
+
+
+def _meminfo(tmp_path, avail_kb):
+    p = tmp_path / "meminfo"
+    p.write_text(f"MemTotal: {avail_kb * 2} kB\nMemAvailable: {avail_kb} kB\n")
+    return str(p)
+
+
+def test_worker_heap_splits_available_memory(tmp_path):
+    # 16 GB across 2 workers: 8 GB each, less the 2 GB off-heap allowance
+    assert worker_heap(2, _meminfo(tmp_path, 16 * 1024 ** 2)) == "6144m"
+    assert worker_heap(2, _meminfo(tmp_path, 64 * 1024 ** 2)) == "10240m"
+    assert worker_heap(4, _meminfo(tmp_path, 4 * 1024 ** 2)) == "1024m"
+    assert worker_heap(2, str(tmp_path / "missing")) == "10g"

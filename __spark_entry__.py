@@ -371,9 +371,9 @@ _UNION_TABLES = ("customer", "orders", "lineitem")
 def _inferred(spark: SparkSession, sf_dir: str, *tables: str) -> DataFrame:
     """Profile + inference, memoized: single- and multi-table requests over
     subsets of _UNION_TABLES are filtered views of one cached union
-    inference (its localCheckpoint already materializes it — recompiling per
-    query would pay the cascade's Catalyst tax each time). Profiles are
-    cached per table separately so the data-plane work is shared too."""
+    inference (apply_inference returns driver-local rows, so a view never
+    re-runs the cascade). Profiles are cached per table separately so the
+    data-plane work is shared too."""
     from dataops_testgen_spark.inference import apply_inference
 
     def infer(profs):
@@ -419,8 +419,6 @@ _ORDERS_COLS = [
 
 
 def _q_functional_types(table: str):
-    from dataops_testgen_spark.inference import apply_inference
-
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _inferred(spark, sf_dir, table).select(*_INFER_OUT)
 
@@ -1968,9 +1966,8 @@ def q_correlation_screen_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame
     from dataops_testgen_spark.inference import apply_inference
 
     lim = _lineitem_m(spark, sf_dir)
-    # apply_inference already returns a checkpointed leaf (the screen's
-    # class branches + eligibility collect all reuse it) — the extra
-    # wrap here only added a copy job + plan (r14)
+    # apply_inference returns a driver-local leaf, which the screen's class
+    # branches and eligibility collect all reuse
     inf = apply_inference(profile_table(lim, "lineitem_m", run_date=RUN_DATE))
     out = screen_anomalies(inf, tables={"lineitem_m": lim})
     return out.select(
@@ -2096,8 +2093,7 @@ def q_spearman_screen_lineitem(spark: SparkSession,
     from dataops_testgen_spark.inference import apply_inference
 
     sp = _lineitem_sp(spark, sf_dir)
-    # apply_inference already returns a checkpointed leaf — re-wrapping it
-    # here only added a pointless copy job + plan (r14)
+    # apply_inference returns a driver-local leaf; nothing to re-wrap
     inf = apply_inference(profile_table(sp, "lineitem_sp", run_date=RUN_DATE))
     out = screen_anomalies(inf, tables={"lineitem_sp": sp}, spearman=True)
     return out.select(

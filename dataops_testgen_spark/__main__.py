@@ -63,12 +63,10 @@ def _profile_all(spark, tables, run_date, approx=False, sample=False):
     from dataops_testgen_spark.inference import apply_inference
     from dataops_testgen_spark.profiling.profiler import profile_tables
 
-    prof = profile_tables(tables, run_date=run_date, approx=approx,
-                          sample=sample)
-    # checkpointed: the screen's class branches plus the Correlation/
-    # Dependence eligibility collects would otherwise each re-execute
-    # the inference cascade's expression DAG
-    return apply_inference(prof).localCheckpoint(eager=False)
+    # driver-local rows: the screen's class branches and eligibility
+    # collects reuse them without re-running the inference cascade
+    return apply_inference(profile_tables(tables, run_date=run_date,
+                                          approx=approx, sample=sample))
 
 
 def _profile_incremental(spark, tables, args):

@@ -1,7 +1,7 @@
 """Inclusion-dependency (foreign-key candidate) discovery.
 
 The reference's ID-FK inference (functional_datatype.sql:559-571, our
-`functional_type._apply_id_refinement`) marks a column ID-FK only when
+`functional_type._id_refinement`) marks a column ID-FK only when
 the SAME column name is ID-Unique in another table. Real schemas rename
 keys at every hop — TPC-H itself: ``n_regionkey`` referencing
 ``r_regionkey`` — so this extension discovers candidates by PROFILE

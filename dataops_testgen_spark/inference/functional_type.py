@@ -4,20 +4,24 @@ Reference: `/root/reference/testgen/template/profiling/functional_datatype.sql:1
 Each UPDATE statement with a `functional_data_type IS NULL` guard becomes a
 first-match rule; unguarded statements become overrides, preserving exact
 statement order. Cross-row statements (positional City :293-309/:511-528,
-ID-FK :559-571) are DataFrame self-joins.
+ID-FK :559-571) are window expressions: a range frame over
+``ordinal_position`` within ``table_name`` for the positional rules (so a gap
+in the ordinals is never skipped) and a ``collect_set`` over ``column_name``
+for ID-FK.
 
 Implementation note: runs of IS-NULL-guarded rules compile to a single
 ``F.coalesce(prev, when(c1,v1), when(c2,v2), ...)`` — first non-null IS
 first-match-wins, and each layer references the previous result exactly once.
 (A naive ``when(prev.isNull() & c, v).otherwise(prev)`` fold duplicates the
 previous expression per rule → 2^n expression nodes → OOMs the driver JVM.)
-The cascade is materialized as a handful of ``withColumn`` layers so no layer
+The cascade is applied as a sequence of ``withColumn`` steps so no step
 multiplies the expression tree by more than a small constant.
 
 Functional table types:
 `functional_tabletype_stage.sql:1-64` + `functional_tabletype_update.sql:1-8`
-— run-history LAG for cumulative/window + per-table functional-type census,
-final label ``<period>-<type>``.
+— run-history check for cumulative/window + per-table functional-type census,
+final label ``<period>-<type>``, both as window aggregates over
+``table_name``.
 
 Deliberate deviations (documented; reference behavior is otherwise the spec):
 - `NOW()` in Period-Year bounds → the profile run_date (determinism).
@@ -478,142 +482,106 @@ def _layer7_classes_final(c) -> Column:
     )
 
 
-def _apply_positional_city_1(df: DataFrame) -> DataFrame:
+def _next_is(value: str, k: int) -> Column:
+    """True when a column ``k`` ordinal positions later in the same table
+    has functional type ``value``, False when none does (NULL when no column
+    sits there). A range frame, so a gap in the ordinals is not skipped."""
+    w = (Window.partitionBy("table_name").orderBy("ordinal_position")
+         .rangeBetween(k, k))
+    return F.max(F.col(FDT) == value).over(w)
+
+
+def _positional_city_1() -> Column:
     """City when State is next column and Zip the one after (:293-309)."""
-    zips = (df.filter(F.col(FDT) == "Zip")
-            .select("table_name", F.col("ordinal_position").alias("_zpos")).distinct())
-    states = (df.filter(F.col(FDT) == "State")
-              .select("table_name", F.col("ordinal_position").alias("_spos")).distinct())
-    flagged = (
-        df.select("table_name", "ordinal_position")
-        .join(zips, ["table_name"]).filter(F.col("_zpos") == F.col("ordinal_position") + 2)
-        .join(states, ["table_name"]).filter(F.col("_spos") == F.col("ordinal_position") + 1)
-        .select("table_name", "ordinal_position").distinct()
-        .withColumn("_city1", F.lit(True))
-    )
-    out = df.join(flagged, ["table_name", "ordinal_position"], "left")
-    expr = memo(
-        df.sparkSession, ("city1_expr",),
-        lambda: F.when(
-            F.col("_city1")
-            & F.lower(F.col("column_name")).rlike("c(i)?ty")
-            & F.col(FDT).isNotNull()
-            & ~F.col(FDT).isin("State", "Zip"),
-            F.lit("City")).otherwise(F.col(FDT)))
-    return out.withColumn(FDT, expr).drop("_city1")
+    return F.when(
+        _next_is("State", 1) & _next_is("Zip", 2)
+        & F.lower(F.col("column_name")).rlike("c(i)?ty")
+        & F.col(FDT).isNotNull()
+        & ~F.col(FDT).isin("State", "Zip"),
+        F.lit("City")).otherwise(F.col(FDT))
 
 
-def _apply_positional_city_2(df: DataFrame) -> DataFrame:
+def _positional_city_2() -> Column:
     """City when the NEXT column is State and this column looks city-like
     (:511-528)."""
-    states = (df.filter(F.col(FDT) == "State")
-              .select("table_name", F.col("ordinal_position").alias("_spos")).distinct())
-    flagged = (
-        df.select("table_name", "ordinal_position")
-        .join(states, ["table_name"]).filter(F.col("_spos") == F.col("ordinal_position") + 1)
-        .select("table_name", "ordinal_position").distinct()
-        .withColumn("_city2", F.lit(True))
+    v = F.nullif(F.col("value_ct").cast("double"), F.lit(0.0))
+    cond = (
+        _next_is("State", 1)
+        & (F.col("includes_digit_ct") / v < 0.05)
+        & (F.col("numeric_ct") / v < 0.05)
+        & (F.col("date_ct") / v < 0.05)
+        & F.col("avg_length").between(7, 12)
+        & (F.col("avg_embedded_spaces") < 1)
+        & F.col("distinct_value_ct").between(15, 40000)
     )
-    out = df.join(flagged, ["table_name", "ordinal_position"], "left")
-
-    def build():
-        v = F.nullif(F.col("value_ct").cast("double"), F.lit(0.0))
-        cond = (
-            F.col("_city2")
-            & (F.col("includes_digit_ct") / v < 0.05)
-            & (F.col("numeric_ct") / v < 0.05)
-            & (F.col("date_ct") / v < 0.05)
-            & F.col("avg_length").between(7, 12)
-            & (F.col("avg_embedded_spaces") < 1)
-            & F.col("distinct_value_ct").between(15, 40000)
-        )
-        return F.when(cond, F.lit("City")).otherwise(F.col(FDT))
-
-    expr = memo(df.sparkSession, ("city2_expr",), build)
-    return out.withColumn(FDT, expr).drop("_city2")
+    return F.when(cond, F.lit("City")).otherwise(F.col(FDT))
 
 
-def _apply_id_refinement(df: DataFrame) -> DataFrame:
+def _id_refinement() -> tuple:
     """ID → ID-Secondary/ID-Group → ID-Unique[-SK] → ID-FK (:532-571)."""
     c = F.col
-
-    def build():
-        value_pct = F.round(100.0 * c("value_ct").cast("double")
-                            / F.nullif(c("record_ct").cast("double"),
-                                       F.lit(0.0)))
-        uniq_pct = F.round(100.0 * c("distinct_value_ct").cast("double")
-                           / F.nullif(c("value_ct").cast("double"),
-                                      F.lit(0.0)))
-        sec = F.when(
-            c(FDT) == "ID",
-            F.when((value_pct > 70) & (uniq_pct >= 75), F.lit("ID-Secondary"))
-            .when((value_pct > 70) & (uniq_pct < 75), F.lit("ID-Group"))
-            .otherwise(F.lit("ID")),
-        ).otherwise(c(FDT))
-        unique_row = ((c("record_ct") == c("distinct_value_ct"))
-                      & (c("record_ct") > 50))
-        uniq = (F.when(c(FDT).isin("ID", "ID-Secondary") & unique_row,
-                       F.lit("ID-Unique"))
-                .when((c(FDT) == "ID-SK") & unique_row, F.lit("ID-Unique-SK"))
-                .otherwise(c(FDT)))
-        other_table = F.exists("_unique_tables",
-                               lambda t: t != F.col("table_name"))
-        fk = F.when(
-            c("_unique_tables").isNotNull() & other_table
-            & ~c(FDT).isin("ID-Unique", "ID-Unique-SK"),
-            F.lit("ID-FK"),
-        ).otherwise(c(FDT))
-        return sec, uniq, fk
-
-    sec, uniq, fk = memo(df.sparkSession, ("id_refinement_exprs",), build)
-    df = df.withColumn(FDT, sec).withColumn(FDT, uniq)
+    value_pct = F.round(100.0 * c("value_ct").cast("double")
+                        / F.nullif(c("record_ct").cast("double"), F.lit(0.0)))
+    uniq_pct = F.round(100.0 * c("distinct_value_ct").cast("double")
+                       / F.nullif(c("value_ct").cast("double"), F.lit(0.0)))
+    sec = F.when(
+        c(FDT) == "ID",
+        F.when((value_pct > 70) & (uniq_pct >= 75), F.lit("ID-Secondary"))
+        .when((value_pct > 70) & (uniq_pct < 75), F.lit("ID-Group"))
+        .otherwise(F.lit("ID")),
+    ).otherwise(c(FDT))
+    unique_row = ((c("record_ct") == c("distinct_value_ct"))
+                  & (c("record_ct") > 50))
+    uniq = (F.when(c(FDT).isin("ID", "ID-Secondary") & unique_row,
+                   F.lit("ID-Unique"))
+            .when((c(FDT) == "ID-SK") & unique_row, F.lit("ID-Unique-SK"))
+            .otherwise(c(FDT)))
     # ID-FK: same column name is ID-Unique[-SK] in a DIFFERENT table
-    uniques = (
-        df.filter(c(FDT).isin("ID-Unique", "ID-Unique-SK"))
-        .groupBy("column_name").agg(F.collect_set("table_name").alias("_unique_tables"))
-    )
-    df = df.join(uniques, "column_name", "left")
-    return df.withColumn(FDT, fk).drop("_unique_tables")
+    unique_in = F.collect_set(
+        F.when(c(FDT).isin("ID-Unique", "ID-Unique-SK"), c("table_name"))
+    ).over(Window.partitionBy("column_name"))
+    fk = F.when(
+        F.exists(unique_in, lambda t: t != c("table_name"))
+        & ~c(FDT).isin("ID-Unique", "ID-Unique-SK"),
+        F.lit("ID-FK"),
+    ).otherwise(c(FDT))
+    return sec, uniq, fk
 
 
-def _apply_measurement_pct(df: DataFrame) -> DataFrame:
+def _measurement_pct() -> tuple:
     """Measurement Pct refinements (:575-594)."""
-    def build():
-        c = F.col
-        name_expr = F.when(
-            c(FDT).isin("Measurement", "Measurement Discrete", "UNKNOWN")
-            & (c("general_type") == "N")
-            & (c("min_value") >= -200) & (c("max_value") <= 200)
-            & (H.ilike(c("column_name"), "%pct%") | H.ilike(c("column_name"), "%percent%")),
-            F.lit("Measurement Pct"),
-        ).otherwise(c(FDT))
-        pct_pat = r"^N{1,3}(\.N+)?%$"
+    c = F.col
+    name_expr = F.when(
+        c(FDT).isin("Measurement", "Measurement Discrete", "UNKNOWN")
+        & (c("general_type") == "N")
+        & (c("min_value") >= -200) & (c("max_value") <= 200)
+        & (H.ilike(c("column_name"), "%pct%") | H.ilike(c("column_name"), "%percent%")),
+        F.lit("Measurement Pct"),
+    ).otherwise(c(FDT))
+    pct_pat = r"^N{1,3}(\.N+)?%$"
 
-        def p(n):
-            return F.trim(H.nth_pattern(c("top_patterns"), n))
+    def p(n):
+        return F.trim(H.nth_pattern(c("top_patterns"), n))
 
-        pat_expr = F.when(
-            (c(FDT) == "Code")
-            & c("distinct_pattern_ct").between(1, 3)
-            & (c("value_ct") == c("includes_digit_ct"))
-            & (c("min_text") >= "0") & (c("max_text") <= "99")
-            & p(1).rlike(pct_pat)
-            & (p(2).rlike(pct_pat) | (c("distinct_pattern_ct") < 2))
-            & (p(3).rlike(pct_pat) | (c("distinct_pattern_ct") < 3)),
-            F.lit("Measurement Pct"),
-        ).otherwise(c(FDT))
-        return name_expr, pat_expr
-
-    name_expr, pat_expr = memo(
-        df.sparkSession, ("measurement_pct_exprs",), build)
-    return df.withColumn(FDT, name_expr).withColumn(FDT, pat_expr)
+    pat_expr = F.when(
+        (c(FDT) == "Code")
+        & c("distinct_pattern_ct").between(1, 3)
+        & (c("value_ct") == c("includes_digit_ct"))
+        & (c("min_text") >= "0") & (c("max_text") <= "99")
+        & p(1).rlike(pct_pat)
+        & (p(2).rlike(pct_pat) | (c("distinct_pattern_ct") < 2))
+        & (p(3).rlike(pct_pat) | (c("distinct_pattern_ct") < 3)),
+        F.lit("Measurement Pct"),
+    ).otherwise(c(FDT))
+    return name_expr, pat_expr
 
 
-# The 7 cascade layer Columns. Assembling the 622-line cascade is thousands
-# of py4j round-trips (~3-6 s per call, measured) repeated IDENTICALLY on
-# every apply_inference; the Columns are unbound to any DataFrame, so they
-# are memoized per session and (id_mask, sk_mask).
-def _cascade_layers(id_mask: str, sk_mask: str) -> tuple:
+# The cascade's Columns, in application order: each one rewrites
+# functional_data_type from the previous value. Assembling the 622-line
+# cascade is thousands of py4j round-trips (~3-6 s per call, measured)
+# repeated IDENTICALLY on every apply_inference; the Columns are unbound to
+# any DataFrame, so they are memoized per session and (id_mask, sk_mask).
+def _cascade(id_mask: str, sk_mask: str) -> tuple:
     c = F.col
     rd = F.to_date(c("run_date"))
     return (_layer1_initial(c, rd, id_mask, sk_mask),
@@ -621,8 +589,12 @@ def _cascade_layers(id_mask: str, sk_mask: str) -> tuple:
             _layer3_periods(c, rd),
             _layer4_period_overrides(c),
             _layer5_address(c),
+            _positional_city_1(),
             _layer6_names_users(c),
-            _layer7_classes_final(c))
+            _layer7_classes_final(c),
+            _positional_city_2(),
+            *_id_refinement(),
+            *_measurement_pct())
 
 
 def infer_functional_datatypes(
@@ -635,102 +607,93 @@ def infer_functional_datatypes(
     Mask defaults follow table_groups defaults
     (`dbsetup/030_initialize_new_schema_structure.sql:110-111`).
     """
-    l1, l2, l3, l4, l5, l6, l7 = memo(
-        profile.sparkSession, ("cascade", id_mask, sk_mask),
-        lambda: _cascade_layers(id_mask, sk_mask))
-    df = profile.withColumn(FDT, l1)
-    df = df.withColumn(FDT, l2)
-    df = df.withColumn(FDT, l3)
-    df = df.withColumn(FDT, l4)
-    df = df.withColumn(FDT, l5)
-    # Truncate lineage before the self-join passes: each join branch would
-    # otherwise embed (and re-optimize/codegen) the full cascade expression
-    # tree once per occurrence — minutes of pure Catalyst time on a
-    # rows==columns DataFrame.
-    df = df.localCheckpoint(eager=False)
-    df = _apply_positional_city_1(df)
-    df = df.withColumn(FDT, l6)
-    df = df.withColumn(FDT, l7)
-    df = df.localCheckpoint(eager=False)
-    df = _apply_positional_city_2(df)
-    df = _apply_id_refinement(df)
-    df = _apply_measurement_pct(df)
+    df = profile
+    for step in memo(profile.sparkSession, ("cascade", id_mask, sk_mask),
+                     lambda: _cascade(id_mask, sk_mask)):
+        df = df.withColumn(FDT, step)
+    return df
+
+
+def _table_types() -> tuple:
+    """(table_period, table_type) Columns over a table_name window."""
+    w = Window.partitionBy("table_name")
+    # cumulative unless the record count ever drops between runs, in
+    # run_date order (functional_tabletype_stage.sql:20-35)
+    runs = F.array_sort(F.collect_set(F.struct("run_date", "record_ct")).over(w))
+    drops = F.filter(
+        F.zip_with(F.slice(runs, 2, F.size(runs)), runs,
+                   lambda cur, prev: cur["record_ct"] < prev["record_ct"]),
+        lambda dropped: dropped)
+    period = F.when(F.size(drops) == 0, F.lit("cumulative")) \
+        .otherwise(F.lit("window"))
+
+    fdt = F.col(FDT)
+
+    def ct(cond):
+        # distinct (run, type) pairs of the table meeting cond
+        return F.size(F.collect_set(
+            F.when(cond, F.struct("run_date", "record_ct", FDT))).over(w))
+
+    n_id_cat = ct(H.ilike(fdt, "id%") | (fdt == "Category"))
+    n_period = ct(H.ilike(fdt, "period%"))
+    n_measure = ct(H.ilike(fdt, "measure%"))
+    n_nonconst = ct(fdt != "Constant")
+    n_txn_date = ct(H.ilike(fdt, "%transactional date%"))
+    n_names = ct(fdt.isin("Entity Name", "Person Last Name",
+                          "Person Given Name", "Person Full Name"))
+    n_addr = ct(fdt.isin("Address", "City", "State"))
+    n_uids = ct(fdt.isin("ID-Unique", "ID-Unique-SK", "ID-Secondary"))
+    n_attr = ct(fdt.isin("Attribute", "Description"))
+    ttype = (
+        F.when(
+            (n_id_cat > 0)
+            & (((n_period > 0) & (n_measure > 0))
+               | (n_measure.cast("double")
+                  / F.nullif(n_nonconst.cast("double"), F.lit(0.0)) > 0.4)),
+            F.lit("summary"),
+        )
+        .when((n_measure > 0) & (n_txn_date > 0), F.lit("transaction"))
+        .when((n_names > 0) & (n_addr > 1), F.lit("entity"))
+        .when((n_uids > 1) & (n_attr <= 1) & (n_measure <= 1), F.lit("bridge"))
+        .otherwise(F.lit("domain"))
+    )
+    return period, ttype
+
+
+def with_table_types(profile_fdt: DataFrame,
+                     history: DataFrame | None = None) -> DataFrame:
+    """+ table_period, table_type, functional_table_type on every row: the
+    per-table census as window aggregates over table_name.
+
+    ``history``: optional prior-run profile rows (same schema) for the
+    cumulative/window check (`functional_tabletype_stage.sql:20-35`); its
+    rows join the census and are dropped after it. Single-run input
+    classifies as 'cumulative' exactly as the reference does.
+    """
+    df = profile_fdt
+    if history is not None:
+        cols = ["table_name", "run_date", "record_ct", FDT]
+        df = (df.withColumn("_history", F.lit(False))
+              .unionByName(history.select(*cols)
+                           .withColumn("_history", F.lit(True)),
+                           allowMissingColumns=True)
+              .coalesce(1))
+    period, ttype = memo(df.sparkSession, ("table_type_exprs",), _table_types)
+    df = (df.withColumn("table_period", period)
+          .withColumn("table_type", ttype)
+          # NULL for a NULL table_name, as the census join gave
+          .withColumn("functional_table_type", F.when(
+              F.col("table_name").isNotNull(),
+              F.concat_ws("-", "table_period", "table_type"))))
+    if history is not None:
+        df = df.filter(~F.col("_history")).drop("_history")
     return df
 
 
 def infer_table_types(profile_fdt: DataFrame, history: DataFrame | None = None) -> DataFrame:
-    """→ (table_name, table_period, table_type, functional_table_type) per table.
-
-    ``history``: optional prior-run profile rows (same schema) for the
-    cumulative/window LAG check (`functional_tabletype_stage.sql:20-35`);
-    single-run input classifies as 'cumulative' exactly as the reference does.
-    """
-    cols = ["table_name", "run_date", "record_ct", FDT]
-    base = profile_fdt.select(*cols)
-    if history is not None:
-        base = base.unionByName(history.select(*cols))
-    base = base.distinct()
-
-    runs = base.select("table_name", "run_date", "record_ct").distinct()
-    w = Window.partitionBy("table_name").orderBy("run_date")
-    period = (
-        runs.withColumn("_prev", F.lag("record_ct").over(w))
-        .groupBy("table_name")
-        .agg(F.sum(F.when(F.col("record_ct") - F.col("_prev") < 0, 1).otherwise(0)).alias("_dec"))
-        .select(
-            "table_name",
-            F.when(F.col("_dec") == 0, F.lit("cumulative"))
-            .otherwise(F.lit("window")).alias("table_period"),
-        )
-    )
-
-    def build():
-        fdt = F.col(FDT)
-
-        def ct(cond):
-            return F.count(F.when(cond, F.lit(1)))
-
-        aggs = [
-            ct(H.ilike(fdt, "id%") | (fdt == "Category")).alias("n_id_cat"),
-            ct(H.ilike(fdt, "period%")).alias("n_period"),
-            ct(H.ilike(fdt, "measure%")).alias("n_measure"),
-            ct(fdt != "Constant").alias("n_nonconst"),
-            ct(H.ilike(fdt, "%transactional date%")).alias("n_txn_date"),
-            ct(fdt.isin("Entity Name", "Person Last Name",
-                        "Person Given Name", "Person Full Name"))
-            .alias("n_names"),
-            ct(fdt.isin("Address", "City", "State")).alias("n_addr"),
-            ct(fdt.isin("ID-Unique", "ID-Unique-SK", "ID-Secondary"))
-            .alias("n_uids"),
-            ct(fdt.isin("Attribute", "Description")).alias("n_attr"),
-        ]
-        ttype = (
-            F.when(
-                (F.col("n_id_cat") > 0)
-                & (((F.col("n_period") > 0) & (F.col("n_measure") > 0))
-                   | (F.col("n_measure").cast("double")
-                      / F.nullif(F.col("n_nonconst").cast("double"),
-                                 F.lit(0.0)) > 0.4)),
-                F.lit("summary"),
-            )
-            .when((F.col("n_measure") > 0) & (F.col("n_txn_date") > 0),
-                  F.lit("transaction"))
-            .when((F.col("n_names") > 0) & (F.col("n_addr") > 1),
-                  F.lit("entity"))
-            .when((F.col("n_uids") > 1) & (F.col("n_attr") <= 1)
-                  & (F.col("n_measure") <= 1), F.lit("bridge"))
-            .otherwise(F.lit("domain"))
-        )
-        return aggs, ttype
-
-    aggs, table_type = memo(
-        profile_fdt.sparkSession, ("table_type_exprs",), build)
-    census = base.groupBy("table_name").agg(*aggs)
-    return (
-        census.join(period, "table_name")
-        .select("table_name", "table_period", table_type.alias("table_type"))
-        .withColumn(
-            "functional_table_type",
-            F.concat_ws("-", F.col("table_period"), F.col("table_type")),
-        )
-    )
+    """→ (table_name, table_period, table_type, functional_table_type) per
+    table (a NULL table_name is a table too); see ``with_table_types``."""
+    return with_table_types(profile_fdt, history).select(
+        "table_name", "table_period", "table_type",
+        F.concat_ws("-", "table_period", "table_type")
+        .alias("functional_table_type")).distinct()

@@ -10,7 +10,7 @@ Flag format: ``<risk A|B|C>/<class NAME|DEMO|ID|CONTACT>/<subtype>``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.inference import helpers as H
@@ -110,22 +110,19 @@ def _secondary_flag(c) -> Column:
 def flag_pii(profile_fdt: DataFrame) -> DataFrame:
     """profile DF with functional_data_type → + pii_flag."""
     c = F.col
+
+    def build():
+        primary = F.when(c("general_type") == "A", _primary_flag(c))
+        # the secondary screen runs in tables with >1 primary hit
+        hits = F.count(c("pii_flag")).over(Window.partitionBy("table_name"))
+        secondary = F.when(
+            c("pii_flag").isNull() & (c("general_type") == "A") & (hits > 1),
+            _secondary_flag(c),
+        ).otherwise(c("pii_flag"))
+        return primary, secondary
+
     # both screens reference only fixed profile-schema names — built once
     # per session (session.memo), not once per profiled table
-    primary, secondary = memo(
-        profile_fdt.sparkSession, ("pii_flags",),
-        lambda: (_primary_flag(c), _secondary_flag(c)))
-    df = profile_fdt.withColumn(
-        "pii_flag",
-        F.when(c("general_type") == "A", primary),
-    )
-    counts = df.groupBy("table_name").agg(F.count("pii_flag").alias("_pii_ct"))
-    df = df.join(counts, "table_name", "left")
-    df = df.withColumn(
-        "pii_flag",
-        F.when(
-            c("pii_flag").isNull() & (c("general_type") == "A") & (c("_pii_ct") > 1),
-            secondary,
-        ).otherwise(c("pii_flag")),
-    ).drop("_pii_ct")
-    return df
+    primary, secondary = memo(profile_fdt.sparkSession, ("pii_flags",), build)
+    return (profile_fdt.withColumn("pii_flag", primary)
+            .withColumn("pii_flag", secondary))

@@ -5,6 +5,10 @@ datatype suggestions → functional datatypes → functional table types → PII
 CDE. ``apply_inference`` chains the same steps over the profile DataFrame and
 returns it enriched with ``datatype_suggestion, functional_data_type,
 functional_table_type, pii_flag, critical_data_element``.
+
+The input is collected once; the chain, its cross-row rules included (window
+expressions), is ONE plan over a single-partition LocalRelation — one Spark
+job — collected back into a single-partition LocalRelation.
 """
 
 from __future__ import annotations
@@ -15,10 +19,16 @@ from dataops_testgen_spark.inference.cde import flag_cde
 from dataops_testgen_spark.inference.datatype_suggestion import add_datatype_suggestion
 from dataops_testgen_spark.inference.functional_type import (
     infer_functional_datatypes,
-    infer_table_types,
+    with_table_types,
 )
 from dataops_testgen_spark.inference.pii import flag_pii
-from dataops_testgen_spark.session import is_leaf_relation
+from dataops_testgen_spark.session import local_frame
+
+
+def _local(df: DataFrame) -> DataFrame:
+    # one partition: windows over it need no exchange, and a write of it
+    # is one file
+    return local_frame(df.sparkSession, df.collect(), df.schema).coalesce(1)
 
 
 def apply_inference(
@@ -26,29 +36,11 @@ def apply_inference(
     history: DataFrame | None = None,
     id_mask: str = "%id",
     sk_mask: str = "%_sk",
-    materialize: bool = True,
 ) -> DataFrame:
-    if materialize and not is_leaf_relation(profile):
-        # The cascade's first checkpointed chunk (layers 1-5) otherwise
-        # embeds the whole profile aggregation subtree in its analyzed
-        # tree: Catalyst re-walks the fused ~60-metric agg on every
-        # analysis pass of the 622-rule cascade. The profile is one row
-        # per column — cut it to a leaf first (same lineage-truncation
-        # rationale as the merge-path checkpoint; measured ~2 s per
-        # fresh-table screen seat, OPTIMIZATION_r13.md #14).
-        profile = profile.localCheckpoint(eager=False)
-    df = add_datatype_suggestion(profile)
+    df = add_datatype_suggestion(_local(profile))
     df = infer_functional_datatypes(df, id_mask=id_mask, sk_mask=sk_mask)
-    table_types = infer_table_types(df, history=history)
-    df = df.join(table_types.select("table_name", "functional_table_type"),
-                 "table_name", "left")
-    df = flag_pii(df)
-    df = flag_cde(df)
-    if materialize:
-        # The result is metadata-plane (one row per column) but its lineage
-        # carries the whole layered cascade — leaving it lazy makes every
-        # downstream action (anomaly screen branches, generation explode)
-        # re-run Catalyst over those expression trees, which dominates wall
-        # time. Cut the lineage once; the data itself is negligible.
-        df = df.localCheckpoint(eager=False)
-    return df
+    df = with_table_types(
+        df, None if history is None else _local(history.select(
+            "table_name", "run_date", "record_ct", "functional_data_type")))
+    df = flag_cde(flag_pii(df.drop("table_period", "table_type")))
+    return local_frame(df.sparkSession, df.toArrow(), df.schema).coalesce(1)

@@ -30,7 +30,7 @@ from dataops_testgen_spark import schema_scan
 from dataops_testgen_spark.profiling import expressions as X
 from dataops_testgen_spark.profiling import regexes as RX
 from dataops_testgen_spark.profiling.secondary import secondary_profile
-from dataops_testgen_spark.session import memo
+from dataops_testgen_spark.session import local_frame, memo
 
 # Metrics scaled by 1/sample_ratio when sampling (count-like). Distinct counts
 # intentionally NOT scaled (project_update_profile_results_to_estimates.sql).
@@ -259,26 +259,12 @@ def _build_column_rows(cols, row, skey, record_ct, table_name, run_date,
     return out_rows
 
 
-def profile_table(
-    df: DataFrame,
-    table_name: str,
-    run_date: _dt.date | str | None = None,
-    approx: bool = False,
-    exact_percentiles: bool = True,
-    sample: bool = False,
-    sample_key_col: str | None = None,
-    sample_fraction: float | None = None,
-    sample_salt: str = "tg",
-    secondary: bool = True,
-    columns: list[str] | None = None,
-    keep_sketches: bool = False,
-    sketch_capacity: int = 4096,
-    slice_col: str | None = None,
-) -> DataFrame:
+def profile_table(df: DataFrame, table_name: str, **options) -> DataFrame:
     """Profile every column of ``df`` → one row per column (profile_results).
 
-    One aggregate job for all primary metrics + one unpivot job for the
-    secondary (top-k) metrics.
+    ``options`` are ``_table_job``'s keywords. One aggregate job for all
+    primary metrics + one unpivot job for the secondary (top-k) metrics,
+    overlapped from a thread pool, into a ``session.local_frame``.
 
     ``keep_sketches=True`` additionally stores per-column mergeable
     sketches so ``merge_profiles`` can fold partition-incremental profile
@@ -306,6 +292,27 @@ def profile_table(
     ``secondary`` (use keep_sketches' freq/pattern sketches, which are
     slice-aware).
     """
+    return profile_tables({table_name: df}, **options)
+
+
+def _table_job(
+    df: DataFrame,
+    table_name: str,
+    run_date: _dt.date | str | None = None,
+    approx: bool = False,
+    exact_percentiles: bool = True,
+    sample: bool = False,
+    sample_key_col: str | None = None,
+    sample_fraction: float | None = None,
+    sample_salt: str = "tg",
+    secondary: bool = True,
+    columns: list[str] | None = None,
+    keep_sketches: bool = False,
+    sketch_capacity: int = 4096,
+    slice_col: str | None = None,
+):
+    """(tasks, rows): the independent Spark jobs that profile ``df`` and the
+    function that turns their results into profile rows."""
     spark = df.sparkSession
     if isinstance(run_date, str):
         run_date = _dt.date.fromisoformat(run_date)
@@ -429,15 +436,17 @@ def profile_table(
         main_exprs.append(F.count(F.lit(1)).alias("__record_ct"))
 
     # The secondary (top-k unpivot) pass is independent of the primary aggs —
-    # materialize it from the same thread pool so its codegen compile and
-    # stage execution overlap the primaries instead of running serially
-    # after them (pre-r4 it ran inside the consumer's first action).
-    sec_holder = {}
+    # collected from the same thread pool so its codegen compile and stage
+    # execution overlap the primaries; its rows merge into the driver-side
+    # profile rows below.
+    sec_holder: dict[str, dict] = {}
 
     def _run_secondary():
         s = secondary_profile(
             target, [c for c in cols if c.general_type == "A"], table_name)
-        sec_holder["df"] = None if s is None else s.localCheckpoint()
+        if s is not None:
+            for r in s.collect():
+                sec_holder[r["column_name"]] = r.asDict()
 
     # all holders key on (slice_key, column); slice_key is None outside
     # slice mode (and for the whole-table fold inside it there are no
@@ -502,8 +511,6 @@ def profile_table(
                     {"granular": bool(got[f"{c}__gran"]),
                      "days": [d.isoformat() for d in got[f"{c}__days"]]})
 
-    slice_rows: dict[str | None, dict] = {}
-
     def _agg_task(es):
         if slice_col is None:
             return [target.agg(*es).collect()[0].asDict()]
@@ -512,9 +519,8 @@ def profile_table(
                    .agg(F.count(F.lit(1)).alias("__record_ct"), *es))
         return [r.asDict() for r in grouped.collect()]
 
-    jobs = [es for es in (main_exprs, dist_exprs, pct_exprs, sketch_exprs)
-            if es]
-    tasks = [(lambda es=es: _agg_task(es)) for es in jobs]
+    tasks = [(lambda es=es: _agg_task(es))
+             for es in (main_exprs, dist_exprs, pct_exprs, sketch_exprs) if es]
     if secondary:
         tasks.append(lambda: _run_secondary())
     if keep_sketches and any(c.general_type == "N" for c in cols):
@@ -523,67 +529,56 @@ def profile_table(
         tasks.append(lambda: _run_freq_sketches())
     if keep_sketches and any(c.general_type == "D" for c in cols):
         tasks.append(lambda: _run_day_sets())
-    def _fold_parts(parts):
+
+    def rows(parts):
+        """The profile rows, from the tasks' results in task order."""
+        slice_rows: dict[str | None, dict] = {}
         for part in parts:
-            key = part.pop("__slice", None)
-            slice_rows.setdefault(key, {}).update(part)
+            for got in part or ():
+                key = got.pop("__slice", None)
+                slice_rows.setdefault(key, {}).update(got)
+        if not slice_rows:
+            slice_rows[None] = {}        # zero tasks / empty sliced input
+        table_ct = (int(slice_rows[None].get("__record_ct") or 0)
+                    if fold_count else record_ct)
+        out_rows = []
+        # deterministic row order across slices
+        for skey in sorted(slice_rows, key=lambda k: (k is None, k or "")):
+            row = slice_rows[skey]
+            slice_record_ct = (int(row.get("__record_ct") or 0)
+                               if slice_col is not None else table_ct)
+            out_rows.extend(
+                _build_column_rows(cols, row, skey, slice_record_ct,
+                                   table_name, run_date, sample_ratio,
+                                   keep_sketches, qsketch_holder,
+                                   fsketch_holder, dayset_holder))
+        for rec in out_rows:                 # top-k metrics (else NULL)
+            rec.update(sec_holder.get(rec["column_name"], ()))
+        return [tuple(r[f.name] for f in PROFILE_SCHEMA.fields)
+                for r in out_rows]
 
-    if len(tasks) > 1:
-        # All jobs are independent; submitting them from separate threads
-        # lets Spark's scheduler overlap their Catalyst compiles and stage
-        # execution (local[N] has idle cores while one job compiles; FAIR
-        # scheduling in session.py keeps the overlap on busy clusters).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(len(tasks)) as pool:
-            for part in pool.map(lambda t: t(), tasks):
-                if part:
-                    _fold_parts(part)
-    elif tasks:
-        part = tasks[0]()
-        if part:
-            _fold_parts(part)
-    if not slice_rows:
-        slice_rows[None] = {}            # zero tasks / empty sliced input
-
-    if fold_count:
-        record_ct = int(slice_rows[None].get("__record_ct") or 0)
-
-    out_rows = []
-    # deterministic row order across slices (createDataFrame preserves it)
-    for skey in sorted(slice_rows, key=lambda k: (k is None, k or "")):
-        row = slice_rows[skey]
-        slice_record_ct = (int(row.get("__record_ct") or 0)
-                           if slice_col is not None else record_ct)
-        out_rows.extend(
-            _build_column_rows(cols, row, skey, slice_record_ct, table_name,
-                               run_date, sample_ratio, keep_sketches,
-                               qsketch_holder, fsketch_holder,
-                               dayset_holder))
-
-    profile = spark.createDataFrame(
-        [tuple(r[f.name] for f in PROFILE_SCHEMA.fields) for r in out_rows],
-        PROFILE_SCHEMA,
-    )
-    if secondary:
-        sec = sec_holder.get("df")
-        if sec is not None:
-            # sec is already localCheckpoint'ed (materialized in the thread
-            # pool above), so this join carries no table-scan lineage —
-            # downstream consumers (inference self-joins, anomaly screening
-            # branches) never re-run the unpivot scan.
-            profile = (
-                profile.drop("top_patterns", "distinct_pattern_ct",
-                             "top_freq_values", "distinct_value_hash")
-                .join(sec, ["table_name", "column_name"], "left")
-                .select(*[f.name for f in PROFILE_SCHEMA.fields])
-            )
-    return profile
+    return tasks, rows
 
 
-def profile_tables(tables: dict[str, DataFrame], **kwargs) -> DataFrame:
-    out = None
-    for name in sorted(tables):
-        p = profile_table(tables[name], name, **kwargs)
-        out = p if out is None else out.unionByName(p)
-    return out
+def _run_all(tasks: list) -> list:
+    """Every task's result, in order. The tasks are independent Spark jobs:
+    from separate threads their Catalyst compiles and stages overlap
+    (FAIR scheduling in session.py keeps that on busy clusters)."""
+    if len(tasks) < 2:
+        return [t() for t in tasks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(len(tasks)) as pool:
+        return list(pool.map(lambda t: t(), tasks))
+
+
+def profile_tables(tables: dict[str, DataFrame], **options) -> DataFrame:
+    """Profile every table (``profile_table``'s options) into ONE
+    driver-local profile frame, tables in name order. The aggregate jobs of
+    all tables run concurrently from one thread pool."""
+    jobs = [_table_job(tables[name], name, **options)
+            for name in sorted(tables)]
+    results = iter(_run_all([t for tasks, _ in jobs for t in tasks]))
+    out = [r for tasks, rows in jobs
+           for r in rows([next(results) for _ in tasks])]
+    return local_frame(SparkSession.active(), out, PROFILE_SCHEMA)

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine, and the one session-scoped memo.
+"""SparkSession factory tuned for this engine, the one session-scoped memo,
+and ``local_frame``, which keeps the metadata plane on the driver.
 
 Defaults target local[N] testing but the settings are the ones that matter on
 a real cluster too: AQE on (runtime re-plan, skew-join handling, partition
@@ -30,6 +31,22 @@ import threading
 from pyspark.sql import SparkSession
 
 
+def driver_heap(workers: int = 1, cap_mb: int = 24 * 1024,
+                meminfo: str = "/proc/meminfo") -> str:
+    """spark.driver.memory for each of ``workers`` driver JVMs on this host:
+    MemAvailable / workers less 2 GB (metaspace, code cache, direct buffers,
+    Python workers), within [1g, cap_mb]; the cap when meminfo is
+    unreadable."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(line.split()[1]) for line in fh
+                      if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_mb}m"
+    mb = kb // 1024 // workers - 2048
+    return f"{max(1024, min(cap_mb, mb))}m"
+
+
 def get_spark(app_name: str = "dataops_testgen_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     builder = (
@@ -40,7 +57,8 @@ def get_spark(app_name: str = "dataops_testgen_spark", shuffle_partitions: int |
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or driver_heap())
         # The engine's plans are codegen-heavy (a table profile alone emits
         # dozens of generated classes); with the JVM's default 240 MB
         # reserved code cache a long session can fill it, at which point
@@ -59,6 +77,9 @@ def get_spark(app_name: str = "dataops_testgen_spark", shuffle_partitions: int |
         # the per-fresh-table compile tax into a once-per-session cost.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.ui.enabled", "false")
+        # the progress bar shares stderr with the engine's own report lines
+        # and leaves them after a carriage return
+        .config("spark.ui.showConsoleProgress", "false")
         # PySpark 4 captures a Python call site for every Column/DataFrame
         # op when dataFrameDebugging is on (the default): a conf read, a
         # PySparkCurrentOrigin.set and a .clear — 3 extra py4j round trips
@@ -133,6 +154,32 @@ def memo_stats(spark) -> dict[str, dict[str, int]]:
             if a == app:
                 out[key[0]]["entries"] += 1
     return out
+
+
+def local_frame(spark, rows, schema):
+    """``rows`` (a ``pyarrow.Table``, or tuples in ``schema`` order) as a
+    DataFrame over a LocalRelation, which no Spark job builds or collects.
+    It scans as up to defaultParallelism partitions; callers that window or
+    write it ``coalesce(1)`` it, which adds no shuffle."""
+    import datetime as _dt
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType
+
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        for i, f in enumerate(schema.fields):
+            if isinstance(f.dataType, TimestampType):
+                # a collected naive timestamp is local wall time, as in
+                # createDataFrame(list); pyarrow reads any wall time as UTC
+                cols[i] = [v and v.astimezone(_dt.timezone.utc)
+                           for v in cols[i]]
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow)
+    return spark.createDataFrame(rows, schema)
 
 
 def is_leaf_relation(df) -> bool:

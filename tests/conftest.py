@@ -9,7 +9,7 @@ import xml.etree.ElementTree as ET
 import duckdb
 import pytest
 
-from dataops_testgen_spark.session import get_spark
+from dataops_testgen_spark.session import driver_heap, get_spark
 
 # ---------------------------------------------------------------------------
 # Parallel full-suite runner (r14, VERDICT item 2).
@@ -67,25 +67,6 @@ def _parallel_plan(items, nworkers):
     return [b[1] for b in bins if b[1]]
 
 
-# Per worker JVM, beyond its heap: metaspace, code cache, direct buffers,
-# its Python workers and the pytest process that drives it.
-_OFFHEAP_MB = 2048
-
-
-def worker_heap(nworkers, meminfo="/proc/meminfo"):
-    """spark.driver.memory for each of nworkers worker JVMs: MemAvailable
-    split across them, less _OFFHEAP_MB each, capped at 10g (floor 1g).
-    Without a readable meminfo, 10g."""
-    try:
-        with open(meminfo) as fh:
-            kb = next(int(line.split()[1]) for line in fh
-                      if line.startswith("MemAvailable:"))
-    except (OSError, StopIteration, ValueError, IndexError):
-        return "10g"
-    mb = kb // 1024 // nworkers - _OFFHEAP_MB
-    return f"{max(1024, min(10 * 1024, mb))}m"
-
-
 def worker_tally(returncode, junit_path):
     """(passed, failed, errors) of one worker pytest run, read from its junit
     xml. Fails closed: a missing or unreadable file is one error, and a
@@ -116,7 +97,7 @@ def pytest_runtestloop(session):
     nworkers = max(2, min(5, cpus // 6))
     worker_cpus = max(6, cpus // nworkers)
     plan = _parallel_plan(session.items, nworkers)
-    heap = worker_heap(len(plan))
+    heap = driver_heap(len(plan), cap_mb=10 * 1024)
     tw = config.pluginmanager.get_plugin("terminalreporter")
 
     def say(msg):

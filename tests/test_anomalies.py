@@ -616,9 +616,11 @@ def test_group_dependence_eta2_oracle(spark, duck, sf_dir):
     inputs (r12 verdict item 1: the driver seat now emits only exact
     values, so the float-valued eta² parity lives HERE, where both
     engines share a box — tolerance-based, not hashed)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    # this checkout's registry, not whichever one is first on sys.path
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
 
     from dataops_testgen_spark.anomalies.dependence import (

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from dataops_testgen_spark.inference import apply_inference
 from dataops_testgen_spark.inference.functional_type import infer_table_types
-from dataops_testgen_spark.profiling.profiler import profile_table
+from dataops_testgen_spark.profiling.profiler import profile_table, profile_tables
 
 RUN_DATE = "2026-08-01"
 
@@ -211,6 +211,55 @@ def test_table_period_window_vs_cumulative(spark):
 
     tt2 = infer_table_types(inferred).collect()[0]
     assert tt2["table_period"] == "cumulative"
+
+
+_CITIES = ["Aberdeen", "Bartlett", "Chandler", "Davenport", "Edmonton",
+           "Fairfield", "Glendale", "Hartford", "Irvington", "Jamestown",
+           "Kirkland", "Lakewood", "Madisonia", "Nashville", "Oakland",
+           "Pasadena", "Quantico", "Richmond", "Syracuse", "Torrance"]
+
+
+def test_positional_city_respects_ordinal_gaps(spark):
+    """Positional City (:511-528) looks at ordinal_position + 1, not at the
+    next profiled row: with the column between city_name and state left out
+    of the profile, state sits two positions on and city_name is no City."""
+    rows = [(_CITIES[i % 20], f"note {i}", ["CA", "NY", "TX", "WA"][i % 4],
+             f"{90000 + i % 100:05d}") for i in range(600)]
+    full = spark.createDataFrame(
+        rows, "city_name string, note string, state string, zip string")
+    prof = profile_tables({"contiguous": full.drop("note"), "gapped": full},
+                          run_date=RUN_DATE,
+                          columns=["city_name", "state", "zip"])
+    got = {(r["table_name"], r["column_name"]):
+           (r["ordinal_position"], r["functional_data_type"])
+           for r in apply_inference(prof).collect()}
+    assert got[("contiguous", "city_name")] == (1, "City")
+    assert got[("gapped", "state")] == (3, "State")
+    assert got[("gapped", "city_name")][0] == 1
+    assert got[("gapped", "city_name")][1] != "City"
+
+
+def test_apply_inference_is_one_job(spark):
+    """The whole chain over a collected profile is one plan: one Spark job
+    per call, and a one-partition result (one file per store write)."""
+    a = spark.createDataFrame([(i, f"A{i % 7}", float(i)) for i in range(300)],
+                              "a_id long, a_code string, a_amt double")
+    b = spark.createDataFrame([(i % 300, f"{i} Main St") for i in range(900)],
+                              "a_id long, street_address string")
+    prof = profile_tables({"a": a, "b": b}, run_date=RUN_DATE)
+    sc = spark.sparkContext
+    group = "test_apply_inference_is_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        out = apply_inference(prof)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert out.rdd.getNumPartitions() == 1
+    vals = {(r["table_name"], r["column_name"]): r["functional_data_type"]
+            for r in out.collect()}
+    assert vals[("a", "a_id")] == "ID-Unique"
+    assert vals[("b", "a_id")] == "ID-FK"
 
 
 def test_inference_on_real_tables(spark, sf_dir):

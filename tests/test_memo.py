@@ -171,3 +171,38 @@ def test_memoized_seats_survive_session_restart(sf_dir):
         assert stats[ns]["misses"] >= 1, ns
     assert stats["minhash_pairs"] == {"hits": 0, "misses": 1, "entries": 1}
     assert stats["score_results"] == {"hits": 0, "misses": 1, "entries": 1}
+
+
+def test_session_turns_console_progress_off(spark):
+    # the progress bar would share stderr with bench.py's report lines
+    assert spark.sparkContext.getConf().get(
+        "spark.ui.showConsoleProgress") == "false"
+
+
+def test_local_frame_reads_naive_timestamps_as_local_time(monkeypatch):
+    # collect() hands back naive local wall times; the frame must hold the
+    # same instant createDataFrame(list) would, on any host timezone
+    import datetime as dt
+    import time
+
+    from pyspark.sql import types as T
+
+    from dataops_testgen_spark.session import local_frame
+
+    class Capture:
+        def createDataFrame(self, rows, schema):
+            return rows
+
+    schema = T.StructType([T.StructField("t", T.TimestampType()),
+                           T.StructField("n", T.TimestampNTZType())])
+    wall = dt.datetime(2024, 1, 2, 3, 4, 5)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        table = local_frame(Capture(), [(wall, wall), (None, None)], schema)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert table.column("t").to_pylist() == [
+        dt.datetime(2024, 1, 2, 8, 4, 5, tzinfo=dt.timezone.utc), None]
+    assert table.column("n").to_pylist() == [wall, None]

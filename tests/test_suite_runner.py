@@ -1,8 +1,10 @@
 """The parallel suite runner: its per-worker tally (conftest.worker_tally)
-fails closed, and its worker heaps (conftest.worker_heap) fit the memory
+fails closed, and its worker heaps (session.driver_heap) fit the memory
 available."""
 
-from conftest import worker_heap, worker_tally
+from conftest import worker_tally
+
+from dataops_testgen_spark.session import driver_heap
 
 _ALL_PASS = """<?xml version="1.0" encoding="utf-8"?>
 <testsuites><testsuite name="pytest" errors="0" failures="0" skipped="0"
@@ -51,8 +53,20 @@ def _meminfo(tmp_path, avail_kb):
 
 
 def test_worker_heap_splits_available_memory(tmp_path):
-    # 16 GB across 2 workers: 8 GB each, less the 2 GB off-heap allowance
+    # the runner's call: its worker count and a 10g cap. 16 GB across 2
+    # workers: 8 GB each, less the 2 GB off-heap allowance
+    def worker_heap(n, meminfo):
+        return driver_heap(n, cap_mb=10 * 1024, meminfo=meminfo)
+
     assert worker_heap(2, _meminfo(tmp_path, 16 * 1024 ** 2)) == "6144m"
     assert worker_heap(2, _meminfo(tmp_path, 64 * 1024 ** 2)) == "10240m"
     assert worker_heap(4, _meminfo(tmp_path, 4 * 1024 ** 2)) == "1024m"
-    assert worker_heap(2, str(tmp_path / "missing")) == "10g"
+    assert worker_heap(2, str(tmp_path / "missing")) == "10240m"
+
+
+def test_session_default_heap_fits_one_jvm(tmp_path):
+    # get_spark's default when SPARK_DRIVER_MEMORY is unset: one JVM, at
+    # most the old fixed 24g
+    assert driver_heap(meminfo=_meminfo(tmp_path, 15 * 1024 ** 2)) == "13312m"
+    assert driver_heap(meminfo=_meminfo(tmp_path, 64 * 1024 ** 2)) == "24576m"
+    assert driver_heap(meminfo=str(tmp_path / "missing")) == "24576m"

@@ -63,11 +63,13 @@ def test_covariance_oracle_parity_with_nulls_and_dup_ids(spark, tmp_path):
     / NULL element dropped) and be row-keyed (duplicate vec_ids must not
     cross-multiply in its self-join)."""
     import importlib
+    import os
     import sys as _sys
 
     import duckdb
 
-    _sys.path.insert(0, "/root/repo")
+    # this checkout's registry, not whichever one is first on sys.path
+    _sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     em = importlib.import_module("__spark_entry__")
     rng = np.random.default_rng(37)
     V = rng.normal(size=(40, 4))

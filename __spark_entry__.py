@@ -25,7 +25,7 @@ from dataops_testgen_spark.pipeline import retrieval as RET
 from dataops_testgen_spark.pipeline import similarity as SIM
 from dataops_testgen_spark.pipeline import text as TX
 from dataops_testgen_spark.profiling.profiler import profile_table
-from dataops_testgen_spark.session import memo
+from dataops_testgen_spark.session import memo, pool_map
 
 RUN_DATE = "2026-08-01"  # pinned so date metrics are deterministic
 
@@ -384,12 +384,8 @@ def _inferred(spark: SparkSession, sf_dir: str, *tables: str) -> DataFrame:
         # them from a thread pool overlaps their Catalyst compiles and
         # stages (FAIR scheduler), cutting the first consumer query's
         # wall-clock roughly by the slowest-vs-sum ratio
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(len(_UNION_TABLES)) as pool:
-            profs = list(pool.map(
-                lambda t: _profiled(spark, sf_dir, t), _UNION_TABLES))
-        return infer(profs)
+        return infer(pool_map(spark, lambda t: _profiled(spark, sf_dir, t),
+                              _UNION_TABLES))
 
     if set(tables) <= set(_UNION_TABLES):
         u = memo(spark, ("inferred", sf_dir, "__union__"), infer_union)
@@ -4613,8 +4609,6 @@ def _slice_profiles_parallel(df, n, profile_kwargs, table_name="orders"):
     the jobs are independent and eager, FAIR scheduler overlaps their
     compiles and stages; in production each arriving partition profiles
     on its own schedule anyway) and return the unioned profile rows."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from dataops_testgen_spark.profiling.profiler import profile_table
 
     key = profile_kwargs.pop("slice_key")
@@ -4623,12 +4617,8 @@ def _slice_profiles_parallel(df, n, profile_kwargs, table_name="orders"):
         return profile_table(df.filter(F.col(key) % n == i), table_name,
                              run_date=RUN_DATE, **profile_kwargs)
 
-    with ThreadPoolExecutor(n) as pool:
-        parts_list = list(pool.map(one, range(n)))
-    parts = None
-    for p in parts_list:
-        parts = p if parts is None else parts.unionByName(p)
-    return parts
+    return reduce(DataFrame.unionByName, pool_map(df.sparkSession, one,
+                                                  range(n)))
 
 
 def q_merged_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:

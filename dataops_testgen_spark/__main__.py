@@ -59,14 +59,38 @@ def _load_tables(spark, data_dir: str, bucket_dir: str = "") -> dict:
     return tables
 
 
-def _profile_all(spark, tables, run_date, approx=False, sample=False):
+def _profile_all(spark, tables, run_date, approx=False, sample=False,
+                 store=None):
+    """The inferred profile of ``tables`` as driver-local rows (the
+    screen's class branches and eligibility collects reuse them without
+    re-running the inference cascade). With a ``store``, a stored run of
+    the same inputs and options (``profiling_runs.input_key``) is read
+    instead of profiling again."""
     from dataops_testgen_spark.inference import apply_inference
     from dataops_testgen_spark.profiling.profiler import profile_tables
+    from dataops_testgen_spark.store import profile_input_key
 
-    # driver-local rows: the screen's class branches and eligibility
-    # collects reuse them without re-running the inference cascade
+    if store is not None:
+        key = profile_input_key(tables, run_date, approx=approx,
+                                sample=sample)
+        stored = store.stored_profile(key) if key else None
+        if stored is not None:
+            return stored
     return apply_inference(profile_tables(tables, run_date=run_date,
                                           approx=approx, sample=sample))
+
+
+def _record_profile(spark, args, tables, inferred, anomalies) -> None:
+    """run-profile / run-anomalies --store: record the run, keyed by its
+    inputs unless it is an --incremental merged profile."""
+    from dataops_testgen_spark.store import profile_input_key
+
+    key = None if getattr(args, "incremental", False) else profile_input_key(
+        tables, args.run_date, approx=args.approx, sample=args.sample)
+    run_id = _store(spark, args).record_profile_run(
+        inferred, anomalies, table_group_id=args.table_group or "default",
+        run_date=args.run_date, input_key=key)
+    print(f"profile_run_id: {run_id}")
 
 
 def _profile_incremental(spark, tables, args):
@@ -182,12 +206,7 @@ def cmd_run_profile(args) -> int:
             spearman=getattr(args, "spearman", False),
         ).localCheckpoint(eager=False)
     if args.store:
-        store = _store(spark, args)
-        run_id = store.record_profile_run(
-            inferred, anomalies,
-            table_group_id=args.table_group or "default",
-            run_date=args.run_date)
-        print(f"profile_run_id: {run_id}")
+        _record_profile(spark, args, tables, inferred, anomalies)
     if args.notify_out:
         from dataops_testgen_spark.notifications import (
             build_profiling_run_event)
@@ -219,12 +238,7 @@ def cmd_run_anomalies(args) -> int:
         spearman=getattr(args, "spearman", False),
     ).localCheckpoint(eager=False)
     if args.store:
-        store = _store(spark, args)
-        run_id = store.record_profile_run(
-            inferred, anomalies,
-            table_group_id=args.table_group or "default",
-            run_date=args.run_date)
-        print(f"profile_run_id: {run_id}")
+        _record_profile(spark, args, tables, inferred, anomalies)
     if args.notify_out:
         from dataops_testgen_spark.notifications import (
             build_profiling_run_event)
@@ -257,10 +271,11 @@ def _generate(inferred, args):
 def cmd_run_test_generation(args) -> int:
     spark = _spark()
     tables = _load_tables(spark, args.data_dir)
-    inferred = _profile_all(spark, tables, args.run_date)
+    store = _store(spark, args) if args.store else None
+    inferred = _profile_all(spark, tables, args.run_date, store=store)
     gen = _generate(inferred, args)
-    if args.store:
-        _store(spark, args).record_test_generation(
+    if store is not None:
+        store.record_test_generation(
             gen, test_suite_key=args.test_suite, run_date=args.run_date)
         print(f"test_suite_key: {args.test_suite}")
     _write(gen, args.out, "test_definitions")
@@ -276,11 +291,12 @@ def cmd_run_monitor_generation(args) -> int:
 
     spark = _spark()
     tables = _load_tables(spark, args.data_dir)
-    inferred = _profile_all(spark, tables, args.run_date)
+    store = _store(spark, args) if args.store else None
+    inferred = _profile_all(spark, tables, args.run_date, store=store)
     mon = generate_table_tests(inferred).unionByName(
         generate_freshness_trend_tests(inferred), allowMissingColumns=True)
-    if args.store:
-        _store(spark, args).record_test_generation(
+    if store is not None:
+        store.record_test_generation(
             mon, test_suite_key=args.test_suite + "_monitors",
             run_date=args.run_date)
         print(f"test_suite_key: {args.test_suite}_monitors")
@@ -303,13 +319,13 @@ def cmd_run_tests(args) -> int:
     spark = _spark()
     tables = _load_tables(spark, args.data_dir,
                           bucket_dir=getattr(args, "bucketed", ""))
-    inferred = _profile_all(spark, tables, args.run_date)
+    store = _store(spark, args) if args.store else None
+    inferred = _profile_all(spark, tables, args.run_date, store=store)
     # Reference flow: run-tests executes the suite's STORED definitions
     # (generation is its own command, and manual edits/locks must survive).
     # With a store + an existing suite we do the same; standalone (no
     # store) or --regenerate falls back to generate-then-run.
     gen = None
-    store = _store(spark, args) if args.store else None
     if store is not None and not args.regenerate:
         stored = store.read("test_definitions")
         if stored is not None:
@@ -374,12 +390,13 @@ def cmd_run_tests(args) -> int:
         results = results.unionByName(
             spark.createDataFrame(err_rows, RESULT_SCHEMA))
     previous = None
-    if store is not None:
+    if store is not None and args.notify_out:
+        # the previous run's results feed only the notification events
         prev_runs = store.list_test_runs(args.test_suite).take(1)
         if prev_runs:
-            all_res = store.read("test_results")
-            previous = all_res.filter(
+            previous = store.read("test_results").filter(
                 F.col("test_run_id") == prev_runs[0]["test_run_id"])
+    if store is not None:
         if freshly_generated:
             store.record_test_generation(gen,
                                          test_suite_key=args.test_suite,
@@ -1110,7 +1127,8 @@ def cmd_discover_fks(args) -> int:
 
     spark = _spark()
     tables = _load_tables(spark, args.data_dir)
-    inferred = _profile_all(spark, tables, args.run_date)
+    store = _store(spark, args) if args.store else None
+    inferred = _profile_all(spark, tables, args.run_date, store=store)
     out = fk_discovery(tables, inferred,
                        min_containment=args.min_containment,
                        max_candidates=args.max_candidates,
@@ -1145,11 +1163,11 @@ def cmd_discover_fks(args) -> int:
             _write(defs, args.emit_tests, "test_definitions")
             print(f"emitted {n_defs} Combo_Match definitions "
                   f"-> {args.emit_tests}")
-        if args.store:
+        if store is not None:
             # recorded as a generation for the suite: run-tests
             # --test-suite <suite> then executes the referential
             # monitors alongside every other stored definition
-            _store(spark, args).record_test_generation(
+            store.record_test_generation(
                 defs, test_suite_key=args.test_suite,
                 run_date=args.run_date)
             print(f"test_suite_key: {args.test_suite} "

@@ -365,11 +365,10 @@ def run_cat_tests(
         # independent; submitting them from threads overlaps their Catalyst
         # compiles and stages (local[N] has idle cores while one compiles) —
         # same pattern as profiler.profile_table.
-        from concurrent.futures import ThreadPoolExecutor
+        from dataops_testgen_spark.session import pool_map
 
-        with ThreadPoolExecutor(min(len(jobs), 8)) as pool:
-            for rows in pool.map(_run_job, jobs):
-                out_rows.extend(rows)
+        for rows in pool_map(spark, _run_job, jobs, min(len(jobs), 8)):
+            out_rows.extend(rows)
     elif jobs:
         out_rows.extend(_run_job(jobs[0]))
 

@@ -31,3 +31,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: list[str] | None = None) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
+
+
+def file_listing(df: DataFrame) -> list[tuple[str, int, int]] | None:
+    """``(path, length, modification time ms)`` of every file ``df`` reads,
+    sorted, from the listing its file relations took when they were
+    resolved: no Spark job and no file-system call. None when a leaf of
+    the plan is not a file relation (rows built on the driver, a JDBC
+    source) or the relations hold no file."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    files = []
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        listed = rel.location().allFiles().iterator()
+        while listed.hasNext():
+            st = listed.next()
+            files.append((st.getPath().toString(), st.getLen(),
+                          st.getModificationTime()))
+    return sorted(files) or None

@@ -30,7 +30,7 @@ from dataops_testgen_spark import schema_scan
 from dataops_testgen_spark.profiling import expressions as X
 from dataops_testgen_spark.profiling import regexes as RX
 from dataops_testgen_spark.profiling.secondary import secondary_profile
-from dataops_testgen_spark.session import local_frame, memo
+from dataops_testgen_spark.session import local_frame, memo, pool_map
 
 # Metrics scaled by 1/sample_ratio when sampling (count-like). Distinct counts
 # intentionally NOT scaled (project_update_profile_results_to_estimates.sql).
@@ -566,10 +566,7 @@ def _run_all(tasks: list) -> list:
     (FAIR scheduling in session.py keeps that on busy clusters)."""
     if len(tasks) < 2:
         return [t() for t in tasks]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(len(tasks)) as pool:
-        return list(pool.map(lambda t: t(), tasks))
+    return pool_map(SparkSession.active(), lambda t: t(), tasks)
 
 
 def profile_tables(tables: dict[str, DataFrame], **options) -> DataFrame:

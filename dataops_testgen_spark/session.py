@@ -182,6 +182,22 @@ def local_frame(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
 
 
+def pool_map(spark, fn, items, workers: int | None = None) -> list:
+    """``[fn(x) for x in items]`` from a thread pool. Each task runs with
+    its own copy of the calling thread's Spark local properties (job group,
+    job description, scheduler pool), which pool threads otherwise lack;
+    the copies are separate because Spark SQL writes each query's execution
+    id into them."""
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
+    from pyspark.util import inheritable_thread_target
+
+    tasks = [inheritable_thread_target(spark)(partial(fn, x)) for x in items]
+    with ThreadPoolExecutor(workers or len(tasks) or 1) as pool:
+        return list(pool.map(lambda task: task(), tasks))
+
+
 def is_leaf_relation(df) -> bool:
     """True when the DataFrame's plan is already a materialized leaf (a
     prior localCheckpoint, a bare relation scan, or driver-local rows) —

@@ -15,16 +15,31 @@ test / run, not per data row), so they stay tiny relative to the data being
 profiled; appends are new parquet files per run (no rewrite), and every
 entity query filters on run/suite first so partition pruning applies if the
 store is later partitioned by run_id.
+
+Profile reuse: each stored profiling run carries ``input_key``
+(``profile_input_key``), a hash of its tables' input files (path, length,
+modification time), run date, profiling options and profile schema. A
+consumer holding the same key reads that run's ``profile_results`` rows
+(``stored_profile``) instead of profiling the same files again. Incremental
+runs store a merged profile and therefore a NULL key.
+
+The one-row header tables (``SCHEMAS``) are read with their declared
+schema, so no footer is read to infer it and a store written before a
+column existed reads that column as NULL.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import uuid
 import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
+
+from dataops_testgen_spark.session import local_frame
 
 # App-DB tables persisted per run (ref dbsetup 030_initialize_new_schema
 # structure — the subset that survives the engine redesign).
@@ -53,6 +68,44 @@ BUCKETED_STORE_KEYS: dict[str, list[str]] = {
     "profile_anomaly_results": ["table_name", "column_name"],
     "test_results": ["table_name", "column_name"],
 }
+
+
+def _strings(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
+# Tables read with a declared schema: no footer is read to infer it, and a
+# column added later (profiling_runs.input_key) reads as NULL in files
+# written before it existed.
+SCHEMAS: dict[str, T.StructType] = {
+    "profiling_runs": _strings("profile_run_id", "project_key",
+                               "table_groups_id", "start_time", "run_date",
+                               "status", "input_key"),
+    "test_suites": _strings("test_suite_id", "project_key",
+                            "test_suite_key"),
+    "test_runs": _strings("test_run_id", "project_key", "test_suite_key",
+                          "test_starttime", "run_date", "status"),
+}
+
+
+def profile_input_key(tables: dict[str, DataFrame], run_date: str,
+                      approx: bool = False,
+                      sample: bool = False) -> str | None:
+    """``profiling_runs.input_key`` for a profile of ``tables``: a hash of
+    every table's input files as (path, length, modification time), the
+    run date, the profiling options and ``PROFILE_SCHEMA``'s field names.
+    None when a table has no input files, so the run is never reused. The
+    tables are whole files as the CLI loads them: a filtered relation
+    would get the key of its unfiltered files."""
+    from dataops_testgen_spark.io.loaders import file_listing
+    from dataops_testgen_spark.profiling.profiler import PROFILE_SCHEMA
+
+    files = {name: file_listing(df) for name, df in tables.items()}
+    if not files or None in files.values():
+        return None
+    doc = json.dumps([files, run_date, approx, sample,
+                      PROFILE_SCHEMA.fieldNames()], sort_keys=True)
+    return hashlib.sha256(doc.encode()).hexdigest()
 
 
 class RunStore:
@@ -107,7 +160,6 @@ class RunStore:
         return bool(self.bucket_results) and table in BUCKETED_STORE_KEYS
 
     def _catalog_name(self, table: str) -> str:
-        import hashlib
         h = hashlib.md5(os.path.abspath(self.root).encode()).hexdigest()[:8]
         return f"tg_store_{h}_{table}"
 
@@ -163,6 +215,8 @@ class RunStore:
         path = self._path(table)
         if not os.path.isdir(path):
             return None
+        if table in SCHEMAS:
+            return self.spark.read.schema(SCHEMAS[table]).parquet(path)
         # an append of an EMPTY relation (e.g. a test run where every
         # definition was deactivated) leaves only _SUCCESS — no data
         # files, so schema inference would throw UNABLE_TO_INFER_SCHEMA
@@ -170,6 +224,12 @@ class RunStore:
                    for _r, _d, fs in os.walk(path) for f in fs):
             return None
         return self.spark.read.parquet(path)
+
+    def _append_header(self, table: str, *values: str | None) -> None:
+        # a one-row LocalRelation is one partition, so one file; a
+        # parallelized list spreads over every core and each empty slice
+        # writes a schema-only file
+        self.append(table, local_frame(self.spark, [values], SCHEMAS[table]))
 
     @staticmethod
     def new_run_id() -> str:
@@ -179,18 +239,16 @@ class RunStore:
 
     def record_profile_run(self, inferred: DataFrame, anomalies: DataFrame,
                            table_group_id: str, run_date: str,
-                           status: str = "Complete") -> str:
+                           status: str = "Complete",
+                           input_key: str | None = None) -> str:
         """Persist one profiling run: header row + per-column results +
         anomaly screen output (ref run_profiling_bridge.py writes the same
-        three)."""
+        three). ``input_key`` (``profile_input_key``) is set only when
+        ``inferred`` is the profile of exactly those inputs."""
         run_id = self.new_run_id()
-        stamp = dt.datetime.now().isoformat()
-        hdr = self.spark.createDataFrame(
-            [(run_id, self.project_key, table_group_id, stamp, run_date,
-              status)],
-            "profile_run_id string, project_key string, table_groups_id "
-            "string, start_time string, run_date string, status string")
-        self.append("profiling_runs", hdr)
+        self._append_header("profiling_runs", run_id, self.project_key,
+                            table_group_id, dt.datetime.now().isoformat(),
+                            run_date, status, input_key)
         self.append("profile_results",
                     inferred.withColumn("profile_run_id", F.lit(run_id)),
                     partition_by="profile_run_id")
@@ -213,10 +271,8 @@ class RunStore:
                      for r in suites.select("test_suite_key").distinct()
                      .collect()}
         if test_suite_key not in known:
-            self.append("test_suites", self.spark.createDataFrame(
-                [(str(uuid.uuid4()), self.project_key, test_suite_key)],
-                "test_suite_id string, project_key string, test_suite_key "
-                "string"))
+            self._append_header("test_suites", str(uuid.uuid4()),
+                                self.project_key, test_suite_key)
         self.append(
             "test_definitions",
             test_definitions
@@ -230,17 +286,45 @@ class RunStore:
                         run_date: str, status: str = "Complete",
                         start_time: str | None = None) -> str:
         run_id = self.new_run_id()
-        stamp = start_time or dt.datetime.now().isoformat()
-        self.append("test_runs", self.spark.createDataFrame(
-            [(run_id, self.project_key, test_suite_key, stamp, run_date,
-              status)],
-            "test_run_id string, project_key string, test_suite_key string, "
-            "test_starttime string, run_date string, status string"))
+        self._append_header("test_runs", run_id, self.project_key,
+                            test_suite_key,
+                            start_time or dt.datetime.now().isoformat(),
+                            run_date, status)
         self.append("test_results",
                     results.withColumn("test_run_id", F.lit(run_id))
                     .withColumn("test_suite_key", F.lit(test_suite_key)),
                     partition_by="test_run_id")
         return run_id
+
+    def stored_profile(self, input_key: str) -> DataFrame | None:
+        """The inferred profile of the latest run stored with ``input_key``,
+        read once into a single-partition driver-local frame; None when no
+        stored run has that key."""
+        runs = self.read("profiling_runs")
+        hit = None if runs is None else (
+            runs.filter(F.col("input_key") == input_key)
+            .orderBy(F.col("start_time").desc()).limit(1).collect())
+        if not hit:
+            return None
+        run_id = hit[0]["profile_run_id"]
+        if self._bucketed("profile_results") and self._register_bucketed(
+                "profile_results"):
+            # bucketed files hold rows in bucket order
+            res = (self.read("profile_results")
+                   .filter(F.col("profile_run_id") == run_id)
+                   .drop("profile_run_id")
+                   .orderBy("table_name", "column_name"))
+        else:
+            # the run's own files, so their schema is the run's
+            path = os.path.join(self._path("profile_results"),
+                                f"profile_run_id={run_id}")
+            if not os.path.isdir(path):
+                return None
+            res = self.spark.read.parquet(path)
+        rows = res.toArrow()
+        if not rows.num_rows:
+            return None
+        return local_frame(self.spark, rows, res.schema).coalesce(1)
 
     # -- get_entities queries ----------------------------------------------
     # Each mirrors one template/get_entities/*.sql; all filter before

@@ -488,3 +488,28 @@ def test_slice_col_validation(spark, sf_dir):
         profile_table(df, "orders", slice_col="sl")
     with pytest.raises(ValueError, match="not in DataFrame"):
         profile_table(df, "orders", slice_col="ghost", secondary=False)
+
+
+def test_pool_jobs_inherit_job_group(spark, sf_dir):
+    """profile_tables submits its jobs from a thread pool; each one carries
+    the caller's job group, so per-group attribution sees every job the
+    call made and none of them runs ungrouped."""
+    import datetime
+
+    from dataops_testgen_spark.profiling.profiler import profile_tables
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    tables = {t: spark.read.parquet(f"{sf_dir}/{t}.parquet")
+              for t in ("customer", "nation")}
+    group = "test_pool_jobs_inherit_job_group"
+    ungrouped = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        profile_tables(tables, run_date=datetime.date(2031, 9, 9))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(st.getJobIdsForGroup(None)) - ungrouped == set()
+    # two tables' aggregate and top-k jobs, all in the group
+    assert len(st.getJobIdsForGroup(group)) >= 4

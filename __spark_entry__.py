@@ -1605,7 +1605,11 @@ def _sql_ivfadc(base_where: str, nprobe: int = 2, k: int = 5) -> str:
     """DuckDB IVFADC: the _SQL_PQ_TOPK encoding/LUT machinery plus the
     _SQL_IVF_TOPK coarse assignment, joined so a (query, neighbor) pair
     only scores when the neighbor's cell is among the query's nprobe
-    probed cells. ``base_where`` restricts which vectors are indexed."""
+    probed cells. ``base_where`` restricts which vectors are indexed.
+    Every multi-row sum that feeds a ranking (centroid cosines, codeword
+    norms, ADC dots) adds its terms in dimension or subspace order, so
+    equal code tuples score bit-identically and the result does not depend
+    on how DuckDB's threads split the aggregates."""
     return f"""
 WITH dims AS (
   SELECT vec_id, embedding[i]::DOUBLE AS x,
@@ -1614,11 +1618,13 @@ WITH dims AS (
 cw AS (SELECT vec_id AS c, s, j, x AS w FROM dims WHERE vec_id < 16),
 cents AS (SELECT vec_id AS cid, embedding AS cemb
           FROM embeddings WHERE vec_id < 8),
-cp AS (SELECT e.vec_id, c.cid,
-              UNNEST(e.embedding)::DOUBLE AS xa, UNNEST(c.cemb)::DOUBLE AS xb
-       FROM embeddings e CROSS JOIN cents c),
+cp AS (SELECT e.vec_id, c.cid, i, e.embedding[i]::DOUBLE AS xa,
+              c.cemb[i]::DOUBLE AS xb
+       FROM embeddings e CROSS JOIN cents c, UNNEST(range(1, 65)) AS r(i)),
 cs AS (SELECT vec_id, cid,
-              SUM(xa*xb)/NULLIF(SQRT(SUM(xa*xa))*SQRT(SUM(xb*xb)), 0) AS sim
+              list_sum(list(xa*xb ORDER BY i))
+              / NULLIF(SQRT(list_sum(list(xa*xa ORDER BY i)))
+                       * SQRT(list_sum(list(xb*xb ORDER BY i))), 0) AS sim
        FROM cp GROUP BY 1, 2),
 assign AS MATERIALIZED (
   SELECT vec_id, cid AS cell, rn FROM (
@@ -1636,8 +1642,11 @@ codes AS (SELECT vec_id, s, c FROM (
                    ROW_NUMBER() OVER (PARTITION BY vec_id, s
                                       ORDER BY dist, c) AS rn
               FROM d2) WHERE rn = 1),
-recon AS (SELECT codes.vec_id, SQRT(SUM(cw.w * cw.w)) AS est_norm
-            FROM codes JOIN cw ON codes.s = cw.s AND codes.c = cw.c
+cwn AS (SELECT s, c, list_sum(list(w * w ORDER BY j)) AS sq
+         FROM cw GROUP BY 1, 2),
+recon AS (SELECT codes.vec_id,
+                 SQRT(list_sum(list(cwn.sq ORDER BY codes.s))) AS est_norm
+            FROM codes JOIN cwn ON codes.s = cwn.s AND codes.c = cwn.c
            GROUP BY 1),
 qnorm AS (SELECT vec_id, SQRT(SUM(x * x)) AS qn
             FROM dims WHERE vec_id < 10 GROUP BY 1),
@@ -1645,7 +1654,7 @@ lut AS (SELECT q.vec_id AS query_id, cw.s, cw.c, SUM(q.x * cw.w) AS dp
           FROM dims q JOIN cw ON q.s = cw.s AND q.j = cw.j
          WHERE q.vec_id < 10 GROUP BY 1, 2, 3),
 score AS (SELECT lut.query_id, codes.vec_id AS neighbor_id,
-                 SUM(lut.dp) AS dot
+                 list_sum(list(lut.dp ORDER BY codes.s)) AS dot
             FROM codes
             JOIN lut ON codes.s = lut.s AND codes.c = lut.c
             JOIN assign ba ON ba.vec_id = codes.vec_id AND ba.rn = 1

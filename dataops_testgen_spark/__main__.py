@@ -116,28 +116,20 @@ def _profile_incremental(spark, tables, args):
                   for n, t in tables.items()}
     prof = profile_tables(tables, run_date=args.run_date, approx=args.approx,
                           keep_sketches=True, secondary=False)
-    prev = None
+    latest = []
     if args.store:
         store = _store(spark, args)
-        runs = store.read("profiling_runs")
-        prior = store.read("profile_results")
-        if runs is not None and prior is not None:
-            latest = (runs.filter(
-                F.col("table_groups_id") == (args.table_group or "default"))
-                .orderBy(F.col("start_time").desc()).limit(1).collect())
-            if latest:
-                run_id = latest[0]["profile_run_id"]
-                prev = prior.filter(F.col("profile_run_id") == run_id)
-    if prev is not None:
-        cols = [f.name for f in PROFILE_SCHEMA.fields]
-        avail = set(prev.columns)
-        # a store written before a carrier column existed merges with that
-        # carrier NULL (the affected metrics degrade to NULL, not an error)
-        sel = [F.col(f.name) if f.name in avail
-               else F.lit(None).cast(f.dataType).alias(f.name)
-               for f in PROFILE_SCHEMA.fields]
+        latest = (store.read("profiling_runs").filter(
+            F.col("table_groups_id") == (args.table_group or "default"))
+            .orderBy(F.col("start_time").desc()).limit(1).collect())
+    if latest:
+        # a store written before a carrier column existed reads that
+        # carrier as NULL (the affected metrics degrade to NULL)
+        cols = PROFILE_SCHEMA.fieldNames()
+        prev = store.read("profile_results").filter(
+            F.col("profile_run_id") == latest[0]["profile_run_id"])
         prof = merge_profiles(
-            prev.select(*sel).unionByName(prof.select(*cols)))
+            prev.select(*cols).unionByName(prof.select(*cols)))
     return apply_inference(prof)
 
 
@@ -312,7 +304,8 @@ def cmd_run_tests(args) -> int:
     from dataops_testgen_spark.execution.validation import validate_tests
     from dataops_testgen_spark.generation.selection import to_test_defs
     from dataops_testgen_spark.scoring import rollup_scores
-    from dataops_testgen_spark.scoring.rollup import attach_test_prevalence
+    from dataops_testgen_spark.scoring.rollup import prevalence_detail
+    from dataops_testgen_spark.session import local_frame
 
     from pyspark.sql import functions as F
 
@@ -327,17 +320,15 @@ def cmd_run_tests(args) -> int:
     # store) or --regenerate falls back to generate-then-run.
     gen = None
     if store is not None and not args.regenerate:
-        stored = store.read("test_definitions")
-        if stored is not None:
-            mine = stored.filter(
-                F.col("test_suite_key") == args.test_suite)
-            latest = mine.agg(F.max("last_auto_gen_date")).first()[0]
-            if latest is not None:
-                gen = (mine.filter(F.col("last_auto_gen_date") == latest)
-                       .drop("test_suite_key", "last_auto_gen_date",
-                             "profiling_as_of_date"))
-                print(f"executing stored suite {args.test_suite} "
-                      f"(generated {latest})")
+        mine = store.read("test_definitions").filter(
+            F.col("test_suite_key") == args.test_suite)
+        latest = mine.agg(F.max("last_auto_gen_date")).first()[0]
+        if latest is not None:
+            gen = (mine.filter(F.col("last_auto_gen_date") == latest)
+                   .drop("test_suite_key", "last_auto_gen_date",
+                         "profiling_as_of_date"))
+            print(f"executing stored suite {args.test_suite} "
+                  f"(generated {latest})")
     freshly_generated = gen is None
     if freshly_generated:
         gen = _generate(inferred, args)
@@ -388,7 +379,7 @@ def cmd_run_tests(args) -> int:
         err_rows = [tuple(e.get(f.name) for f in RESULT_SCHEMA.fields)
                     for e in outcome.errors]
         results = results.unionByName(
-            spark.createDataFrame(err_rows, RESULT_SCHEMA))
+            local_frame(spark, err_rows, RESULT_SCHEMA))
     previous = None
     if store is not None and args.notify_out:
         # the previous run's results feed only the notification events
@@ -420,21 +411,9 @@ def cmd_run_tests(args) -> int:
         print(f"notifications: {n} event(s) -> {args.notify_out}")
     _write(results, args.out, "test_results")
 
-    prof_rows = {(r["table_name"], r["column_name"]): r.asDict()
-                 for r in inferred.collect()}
-    record_cts = {t: r["record_ct"] for (t, _c), r in prof_rows.items()}
-    scored = attach_test_prevalence(
-        [r.asDict() for r in results.collect()],
-        profile_lookup=prof_rows, record_cts=record_cts)
-    n_fail = sum(1 for r in scored if r.get("result_code") == 0)
-    print(f"tests: {len(scored)}, failed: {n_fail}")
-    detail = spark.createDataFrame(
-        [(r.get("table_name"), r.get("column_name"),
-          int(r.get("dq_record_ct") or 0),
-          float(r.get("dq_prevalence") or 0.0))
-         for r in scored],
-        "table_name string, column_name string, record_ct long, "
-        "dq_prevalence double")
+    detail = prevalence_detail(results, inferred)
+    codes = [r["result_code"] for r in detail.collect()]
+    print(f"tests: {len(codes)}, failed: {codes.count(0)}")
     _write(rollup_scores(detail), args.out, "test_scores")
     return 0
 
@@ -485,12 +464,10 @@ def cmd_run_monitors(args) -> int:
         per cycle."""
         if store is None:
             return {}
-        res = store.read("test_results")
-        runs = store.read("test_runs")
-        if res is None or runs is None:
-            return {}
-        rows = (res.filter(F.col("test_suite_key") == mon_suite)
-                .join(runs.select("test_run_id", "test_starttime"),
+        rows = (store.read("test_results")
+                .filter(F.col("test_suite_key") == mon_suite)
+                .join(store.read("test_runs")
+                      .select("test_run_id", "test_starttime"),
                       "test_run_id")
                 .select("test_id", "test_starttime", "result_measure",
                         "result_message")
@@ -831,24 +808,20 @@ def cmd_export_observability(args) -> int:
     by JSONL sink; payload shape + <=500/batch chunking unchanged)."""
     from dataops_testgen_spark.observability import export_test_results
 
-    spark = _spark()
-    store = _store(spark, args)
-    res = store.read("test_results")
-    if res is None:
-        print("no test_results in store")
-        return 1
     from pyspark.sql import functions as F
 
+    spark = _spark()
+    store = _store(spark, args)
     run_id = args.test_run_id
     if not run_id:
-        runs = store.read("test_runs")
-        last = (runs.orderBy(F.col("test_starttime").desc()).first()
-                if runs is not None else None)
+        last = (store.read("test_runs")
+                .orderBy(F.col("test_starttime").desc()).first())
         if last is None:
             print("no test_runs in store")
             return 1
         run_id = last["test_run_id"]
-    subset = res.filter(F.col("test_run_id") == run_id)
+    subset = store.read("test_results").filter(
+        F.col("test_run_id") == run_id)
     if args.api_url:
         # reference transport: POST each chunk to the Observability API
         # (run_observability_exporter.py wire format via http_sender)

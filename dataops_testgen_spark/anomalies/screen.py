@@ -21,13 +21,19 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dataops_testgen_spark.anomalies import catalog as CAT
 from dataops_testgen_spark.inference import helpers as H
 from dataops_testgen_spark.session import memo
 
-_OUT_COLS = ["table_name", "column_name", "anomaly_type", "data_object",
-             "likelihood", "detail", "dq_prevalence"]
+# the screen's output: one row per finding (the run store's
+# profile_anomaly_results rows)
+SCREEN_SCHEMA = T.StructType(
+    [T.StructField(n, T.StringType())
+     for n in ("table_name", "column_name", "anomaly_type", "data_object",
+               "likelihood", "detail")]
+    + [T.StructField("dq_prevalence", T.DoubleType())])
 
 
 def _column_screen(profile: DataFrame) -> DataFrame:
@@ -243,4 +249,4 @@ def screen_anomalies(inferred_profile: DataFrame,
                                            meta_rows=meta_rows)):
             if extra is not None:
                 out = out.unionByName(extra)
-    return out.select(*_OUT_COLS)
+    return out.select(*SCREEN_SCHEMA.fieldNames())

@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from dataops_testgen_spark.execution.defs import (TestDef, evaluate_condition,
                                                   result_status)
 from dataops_testgen_spark.profiling.regexes import EMAIL_RE
+from dataops_testgen_spark.session import local_frame, pool_map
 
 # test_types_US_State.yaml measure IN-list (61 codes incl. military/territory).
 US_STATES = [
@@ -365,8 +366,6 @@ def run_cat_tests(
         # independent; submitting them from threads overlaps their Catalyst
         # compiles and stages (local[N] has idle cores while one compiles) —
         # same pattern as profiler.profile_table.
-        from dataops_testgen_spark.session import pool_map
-
         for rows in pool_map(spark, _run_job, jobs, min(len(jobs), 8)):
             out_rows.extend(rows)
     elif jobs:
@@ -379,7 +378,9 @@ def run_cat_tests(
             raise ValueError(
                 "run_cat_tests: no SparkSession could be resolved — pass a "
                 "non-empty tables dict or create an active session first")
-    return spark.createDataFrame(
+    # driver-local rows: later actions on the results run no job
+    return local_frame(
+        spark,
         [tuple(r[f.name] for f in RESULT_SCHEMA.fields) for r in out_rows],
         RESULT_SCHEMA,
     )

@@ -27,6 +27,7 @@ from dataops_testgen_spark.execution import query_tests as QT
 from dataops_testgen_spark.execution.cat import (CAT_OPERATORS,
                                                  RESULT_SCHEMA, _evaluate)
 from dataops_testgen_spark.execution.defs import TestDef
+from dataops_testgen_spark.session import local_frame
 
 # Operator + failure threshold per QUERY type, from the same YAML catalog
 # the CAT table mirrors: every referential measure counts offending
@@ -189,4 +190,4 @@ def run_query_tests(
         from dataops_testgen_spark.session import get_spark
         spark = get_spark()
     data = [tuple(r.get(f.name) for f in RESULT_SCHEMA.fields) for r in rows]
-    return spark.createDataFrame(data, RESULT_SCHEMA)
+    return local_frame(spark, data, RESULT_SCHEMA)

@@ -16,9 +16,18 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dataops_testgen_spark.execution.defs import TestDef
 from dataops_testgen_spark.inference import helpers as H
+
+# generate_selection_tests' output: one row per test definition (the run
+# store's test_definitions rows, before the suite and generation stamps)
+TEST_DEFINITION_SCHEMA = T.StructType(
+    [T.StructField(n, T.StringType())
+     for n in ("test_type", "table_name", "column_name", "test_active",
+               "last_auto_gen_date")]
+    + [T.StructField("params", T.MapType(T.StringType(), T.StringType()))])
 
 _MONTH_LISTS = {
     "full_init": "'January','February','March','April','May','June','July','August','September','October','November','December'",

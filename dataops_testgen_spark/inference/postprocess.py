@@ -14,6 +14,7 @@ job — collected back into a single-partition LocalRelation.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from dataops_testgen_spark.inference.cde import flag_cde
 from dataops_testgen_spark.inference.datatype_suggestion import add_datatype_suggestion
@@ -22,7 +23,19 @@ from dataops_testgen_spark.inference.functional_type import (
     with_table_types,
 )
 from dataops_testgen_spark.inference.pii import flag_pii
+from dataops_testgen_spark.profiling.profiler import PROFILE_SCHEMA
 from dataops_testgen_spark.session import local_frame
+
+# apply_inference's output: the profile columns, then the inference columns
+# (the run store's profile_results rows)
+INFERRED_SCHEMA = T.StructType([
+    *PROFILE_SCHEMA.fields,
+    T.StructField("functional_data_type", T.StringType()),
+    T.StructField("datatype_suggestion", T.StringType()),
+    T.StructField("functional_table_type", T.StringType()),
+    T.StructField("pii_flag", T.StringType()),
+    T.StructField("critical_data_element", T.BooleanType()),
+])
 
 
 def _local(df: DataFrame) -> DataFrame:

@@ -26,23 +26,28 @@ import datetime as dt
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from dataops_testgen_spark.scoring.rollup import (attach_test_prevalence,
-                                                  rollup_scores)
+# rollup_scores and attach_test_prevalence resolve at call time, through
+# the module attributes
+from dataops_testgen_spark import scoring
 
-SCORE_HISTORY_SCHEMA = ("refresh_time string, kind string, run_id string, "
-                        "group_key string, dq_affected_data_points double, "
-                        "dq_total_data_points double, dq_score double")
-SCORE_CARD_SCHEMA = ("refresh_time string, card string, category string, "
-                     "label string, score double")
+SCORE_HISTORY_SCHEMA = T.StructType(
+    [T.StructField(n, T.StringType())
+     for n in ("refresh_time", "kind", "run_id", "group_key")]
+    + [T.StructField(n, T.DoubleType())
+       for n in ("dq_affected_data_points", "dq_total_data_points",
+                 "dq_score")])
+SCORE_CARD_SCHEMA = T.StructType(
+    [T.StructField(n, T.StringType())
+     for n in ("refresh_time", "card", "category", "label")]
+    + [T.StructField("score", T.DoubleType())])
 
 
 def latest_profile_run(store, table_group_id: str | None = None) -> str | None:
     """Most recent Complete profiling run (optionally per table group) —
     ``table_groups.last_complete_profile_run_id`` in the reference."""
     runs = store.read("profiling_runs")
-    if runs is None:
-        return None
     if table_group_id:
         runs = runs.filter(F.col("table_groups_id") == table_group_id)
     row = (runs.filter(F.col("status") == "Complete")
@@ -52,8 +57,6 @@ def latest_profile_run(store, table_group_id: str | None = None) -> str | None:
 
 def latest_test_run(store, test_suite_key: str | None = None) -> str | None:
     runs = store.read("test_runs")
-    if runs is None:
-        return None
     if test_suite_key:
         runs = runs.filter(F.col("test_suite_key") == test_suite_key)
     row = (runs.filter(F.col("status") == "Complete")
@@ -61,16 +64,30 @@ def latest_test_run(store, test_suite_key: str | None = None) -> str | None:
     return row[0]["test_run_id"] if row else None
 
 
-def _profile_tables_for_run(store, profile_run_id: str):
-    profile = store.read("profile_results")
-    anomalies = store.read("profile_anomaly_results")
-    if profile is None:
-        return None, None
-    profile = profile.filter(F.col("profile_run_id") == profile_run_id)
-    if anomalies is not None:
-        anomalies = anomalies.filter(
-            F.col("profile_run_id") == profile_run_id)
-    return profile, anomalies
+def _run_rows(store, table: str, key: str, run_id: str) -> DataFrame:
+    return store.read(table).filter(F.col(key) == run_id)
+
+
+def _test_detail(store, test_run_id: str,
+                 profile_run_id: str | None) -> DataFrame:
+    """The stored test run's results with their prevalence re-derived from
+    the stored measures and the profile run's tokens."""
+    profile = (None if profile_run_id is None else
+               _run_rows(store, "profile_results", "profile_run_id",
+                         profile_run_id))
+    return scoring.rollup.prevalence_detail(
+        _run_rows(store, "test_results", "test_run_id", test_run_id),
+        profile)
+
+
+def _history_rows(scores: DataFrame, kind: str, run_id: str,
+                  group: str) -> DataFrame:
+    return scores.select(
+        F.lit(dt.datetime.now().isoformat()).alias("refresh_time"),
+        F.lit(kind).alias("kind"), F.lit(run_id).alias("run_id"),
+        F.lit(group).alias("group_key"),
+        F.col("dq_affected_data_points").cast("double"),
+        F.col("dq_total_data_points").cast("double"), "dq_score")
 
 
 def rollup_profile_scores(store, profile_run_id: str | None = None,
@@ -83,23 +100,15 @@ def rollup_profile_scores(store, profile_run_id: str | None = None,
     run_id = profile_run_id or latest_profile_run(store, table_group_id)
     if run_id is None:
         raise ValueError("no Complete profiling run in the store")
-    profile, anomalies = _profile_tables_for_run(store, run_id)
-    if profile is None or anomalies is None:
-        raise ValueError(f"profile run {run_id} has no stored results")
-    detail = (anomalies.join(
-        profile.select("table_name", "column_name", "record_ct"),
-        ["table_name", "column_name"], "left")
-        .filter(F.col("record_ct").isNotNull()))
-    scores = rollup_scores(detail)
-    hdr = store.read("profiling_runs").filter(
-        F.col("profile_run_id") == run_id).take(1)
-    group = hdr[0]["table_groups_id"] if hdr else ""
-    out = scores.select(
-        F.lit(dt.datetime.now().isoformat()).alias("refresh_time"),
-        F.lit("profile").alias("kind"), F.lit(run_id).alias("run_id"),
-        F.lit(group).alias("group_key"),
-        F.col("dq_affected_data_points").cast("double"),
-        F.col("dq_total_data_points").cast("double"), "dq_score")
+    profile = _run_rows(store, "profile_results", "profile_run_id", run_id)
+    detail = (_run_rows(store, "profile_anomaly_results", "profile_run_id",
+                        run_id)
+              .join(profile.select("table_name", "column_name", "record_ct"),
+                    ["table_name", "column_name"], "left")
+              .filter(F.col("record_ct").isNotNull()))
+    hdr = _run_rows(store, "profiling_runs", "profile_run_id", run_id).take(1)
+    out = _history_rows(scoring.rollup_scores(detail), "profile", run_id,
+                        hdr[0]["table_groups_id"] if hdr else "")
     if record:
         store.append("score_history", out)
     return out
@@ -117,37 +126,11 @@ def rollup_test_scores(store, test_run_id: str | None = None,
     run_id = test_run_id or latest_test_run(store, test_suite_key)
     if run_id is None:
         raise ValueError("no Complete test run in the store")
-    results = store.read("test_results")
-    if results is None:
-        raise ValueError("no stored test results")
-    results = results.filter(F.col("test_run_id") == run_id)
-    prof_run = profile_run_id or latest_profile_run(store)
-    prof_rows: dict = {}
-    if prof_run is not None:
-        profile, _ = _profile_tables_for_run(store, prof_run)
-        prof_rows = {(r["table_name"], r["column_name"]): r.asDict()
-                     for r in profile.collect()}
-    record_cts = {t: r["record_ct"] for (t, _c), r in prof_rows.items()}
-    scored = attach_test_prevalence(
-        [r.asDict() for r in results.collect()],
-        profile_lookup=prof_rows, record_cts=record_cts)
-    spark = results.sparkSession
-    detail = spark.createDataFrame(
-        [(r.get("table_name"), r.get("column_name"),
-          int(r.get("dq_record_ct") or 0),
-          float(r.get("dq_prevalence") or 0.0)) for r in scored],
-        "table_name string, column_name string, record_ct long, "
-        "dq_prevalence double")
-    scores = rollup_scores(detail)
-    hdr = store.read("test_runs").filter(
-        F.col("test_run_id") == run_id).take(1)
-    suite = hdr[0]["test_suite_key"] if hdr else ""
-    out = scores.select(
-        F.lit(dt.datetime.now().isoformat()).alias("refresh_time"),
-        F.lit("test").alias("kind"), F.lit(run_id).alias("run_id"),
-        F.lit(suite).alias("group_key"),
-        F.col("dq_affected_data_points").cast("double"),
-        F.col("dq_total_data_points").cast("double"), "dq_score")
+    detail = _test_detail(store, run_id,
+                          profile_run_id or latest_profile_run(store))
+    hdr = _run_rows(store, "test_runs", "test_run_id", run_id).take(1)
+    out = _history_rows(scoring.rollup_scores(detail), "test", run_id,
+                        hdr[0]["test_suite_key"] if hdr else "")
     if record:
         store.append("score_history", out)
     return out
@@ -159,22 +142,18 @@ def recalculate_project_scores(store) -> DataFrame:
     suite with a Complete test run, re-roll its latest run; then refresh
     the score cards. Returns the appended score_history rows."""
     outs = []
-    runs = store.read("profiling_runs")
-    if runs is not None:
-        groups = [r["table_groups_id"] for r in
-                  runs.select("table_groups_id").distinct().collect()]
-        for g in sorted(groups):
-            rid = latest_profile_run(store, g)
-            if rid is not None:
-                outs.append(rollup_profile_scores(store, rid))
-    truns = store.read("test_runs")
-    if truns is not None:
-        suites = [r["test_suite_key"] for r in
-                  truns.select("test_suite_key").distinct().collect()]
-        for s in sorted(suites):
-            rid = latest_test_run(store, s)
-            if rid is not None:
-                outs.append(rollup_test_scores(store, rid))
+    groups = [r["table_groups_id"] for r in store.read("profiling_runs")
+              .select("table_groups_id").distinct().collect()]
+    for g in sorted(groups):
+        rid = latest_profile_run(store, g)
+        if rid is not None:
+            outs.append(rollup_profile_scores(store, rid))
+    suites = [r["test_suite_key"] for r in store.read("test_runs")
+              .select("test_suite_key").distinct().collect()]
+    for s in sorted(suites):
+        rid = latest_test_run(store, s)
+        if rid is not None:
+            outs.append(rollup_test_scores(store, rid))
     if not outs:
         raise ValueError("store has no Complete runs to recalculate")
     refresh_score_cards(store)
@@ -202,35 +181,18 @@ def refresh_score_cards(store, profile_run_id: str | None = None,
     test_run = test_run_id or latest_test_run(store)
     prof_col = prof_dim = None
     if prof_run is not None:
-        profile, anomalies = _profile_tables_for_run(store, prof_run)
-        if profile is not None and anomalies is not None:
-            prof_col = profile_scoring_by_column(profile, anomalies)
-            prof_dim = profile_scoring_by_dimension(profile, anomalies)
+        profile = _run_rows(store, "profile_results", "profile_run_id",
+                            prof_run)
+        anomalies = _run_rows(store, "profile_anomaly_results",
+                              "profile_run_id", prof_run)
+        prof_col = profile_scoring_by_column(profile, anomalies)
+        prof_dim = profile_scoring_by_dimension(profile, anomalies)
     test_col = test_dim = None
     if test_run is not None:
-        # prevalence re-derives from the stored measures + profile tokens
-        results = store.read("test_results").filter(
-            F.col("test_run_id") == test_run)
-        prof_rows: dict = {}
-        if prof_run is not None:
-            profile, _ = _profile_tables_for_run(store, prof_run)
-            prof_rows = {(r["table_name"], r["column_name"]): r.asDict()
-                         for r in profile.collect()}
-        record_cts = {t: r["record_ct"]
-                      for (t, _c), r in prof_rows.items()}
-        scored = attach_test_prevalence(
-            [r.asDict() for r in results.collect()],
-            profile_lookup=prof_rows, record_cts=record_cts)
-        spark = results.sparkSession
-        enriched = spark.createDataFrame(
-            [(r.get("test_type"), r.get("table_name"), r.get("column_name"),
-              int(r.get("result_code") or 0),
-              int(r.get("dq_record_ct") or 0),
-              float(r.get("dq_prevalence") or 0.0)) for r in scored],
-            "test_type string, table_name string, column_name string, "
-            "result_code int, dq_record_ct long, dq_prevalence double")
-        test_col = test_scoring_by_column(enriched)
-        test_dim = test_scoring_by_dimension(enriched)
+        detail = _test_detail(store, test_run, prof_run).withColumnRenamed(
+            "record_ct", "dq_record_ct")
+        test_col = test_scoring_by_column(detail)
+        test_dim = test_scoring_by_dimension(detail)
     if prof_col is None and test_col is None:
         raise ValueError("store has no runs to build score cards from")
 

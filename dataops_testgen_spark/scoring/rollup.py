@@ -13,8 +13,19 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dataops_testgen_spark.scoring.formulas import eval_prevalence
+from dataops_testgen_spark.session import local_frame
+
+TEST_DETAIL_SCHEMA = T.StructType([
+    T.StructField("test_type", T.StringType()),
+    T.StructField("table_name", T.StringType()),
+    T.StructField("column_name", T.StringType()),
+    T.StructField("result_code", T.IntegerType()),
+    T.StructField("record_ct", T.LongType()),
+    T.StructField("dq_prevalence", T.DoubleType()),
+])
 
 
 def sum_ln(p: Column) -> Column:
@@ -93,3 +104,25 @@ def attach_test_prevalence(results: list[dict],
         row["dq_prevalence"] = eval_prevalence(row["test_type"], subs)
         out.append(row)
     return out
+
+
+def prevalence_detail(results: DataFrame,
+                      profile: DataFrame | None = None) -> DataFrame:
+    """One row per test result with its prevalence
+    (``attach_test_prevalence``; ``profile``'s rows supply the formula
+    tokens and each table's record count) as a driver-local
+    ``TEST_DETAIL_SCHEMA`` frame: ``rollup_scores`` input, and the score
+    cards' test side."""
+    prof_rows = {} if profile is None else {
+        (r["table_name"], r["column_name"]): r.asDict()
+        for r in profile.collect()}
+    record_cts = {t: r["record_ct"] for (t, _c), r in prof_rows.items()}
+    scored = attach_test_prevalence(
+        [r.asDict() for r in results.collect()],
+        profile_lookup=prof_rows, record_cts=record_cts)
+    return local_frame(
+        results.sparkSession,
+        [(r.get("test_type"), r.get("table_name"), r.get("column_name"),
+          r.get("result_code"), int(r.get("dq_record_ct") or 0),
+          float(r.get("dq_prevalence") or 0.0)) for r in scored],
+        TEST_DETAIL_SCHEMA)

@@ -23,9 +23,17 @@ consumer holding the same key reads that run's ``profile_results`` rows
 (``stored_profile``) instead of profiling the same files again. Incremental
 runs store a merged profile and therefore a NULL key.
 
-The one-row header tables (``SCHEMAS``) are read with their declared
-schema, so no footer is read to infer it and a store written before a
-column existed reads that column as NULL.
+Declared schemas: every table has one ``StructType`` in ``SCHEMAS``,
+composed from the schema of the module that produces its rows (profiler +
+inference, anomaly screen, test generation, test execution, score refresh)
+plus its run stamps, partition column last. ``read`` returns exactly that
+schema for every table: a column a file lacks reads as NULL (a store
+written before ``profiling_runs.input_key`` existed, or a monitor run's
+narrower ``test_results`` rows), a table nobody has written reads as an
+empty frame, and no footer is read to infer a schema, so a read submits no
+Spark job. The entity queries therefore run the same plan over an empty
+store as over a populated one. Each recorded run writes one parquet file
+per table.
 """
 
 from __future__ import annotations
@@ -39,22 +47,13 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from dataops_testgen_spark.anomalies.screen import SCREEN_SCHEMA
+from dataops_testgen_spark.execution.cat import RESULT_SCHEMA
+from dataops_testgen_spark.generation.selection import TEST_DEFINITION_SCHEMA
+from dataops_testgen_spark.inference.postprocess import INFERRED_SCHEMA
+from dataops_testgen_spark.scoring.refresh import (SCORE_CARD_SCHEMA,
+                                                   SCORE_HISTORY_SCHEMA)
 from dataops_testgen_spark.session import local_frame
-
-# App-DB tables persisted per run (ref dbsetup 030_initialize_new_schema
-# structure — the subset that survives the engine redesign).
-TABLES = (
-    "profiling_runs",
-    "profile_results",
-    "profile_anomaly_results",
-    "test_suites",
-    "test_definitions",
-    "test_runs",
-    "test_results",
-    # scoring refresh layer (ref run_rollup_scores / score card results)
-    "score_history",
-    "score_cards",
-)
 
 # The store's largest relations and the keys their every-refresh consumers
 # join/group on: the scoring refresh joins profile_anomaly_results to
@@ -70,22 +69,36 @@ BUCKETED_STORE_KEYS: dict[str, list[str]] = {
 }
 
 
-def _strings(*names: str) -> T.StructType:
-    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+def _strings(*names: str,
+             base: T.StructType = T.StructType()) -> T.StructType:
+    """``base`` followed by string columns ``names``."""
+    return T.StructType([*base.fields,
+                         *(T.StructField(n, T.StringType()) for n in names)])
 
 
-# Tables read with a declared schema: no footer is read to infer it, and a
-# column added later (profiling_runs.input_key) reads as NULL in files
-# written before it existed.
+# App-DB tables persisted per run (ref dbsetup 030_initialize_new_schema
+# structure — the subset that survives the engine redesign), each with the
+# one schema every read returns. Partition columns come last, as a
+# partitioned read lists them.
 SCHEMAS: dict[str, T.StructType] = {
     "profiling_runs": _strings("profile_run_id", "project_key",
                                "table_groups_id", "start_time", "run_date",
                                "status", "input_key"),
+    "profile_results": _strings("profile_run_id", base=INFERRED_SCHEMA),
+    "profile_anomaly_results": _strings("profile_run_id", base=SCREEN_SCHEMA),
     "test_suites": _strings("test_suite_id", "project_key",
                             "test_suite_key"),
+    "test_definitions": _strings("profiling_as_of_date", "test_suite_key",
+                                 base=TEST_DEFINITION_SCHEMA),
     "test_runs": _strings("test_run_id", "project_key", "test_suite_key",
                           "test_starttime", "run_date", "status"),
+    "test_results": _strings("test_suite_key", "test_run_id",
+                             base=RESULT_SCHEMA),
+    # scoring refresh layer (ref run_rollup_scores / score card results)
+    "score_history": SCORE_HISTORY_SCHEMA,
+    "score_cards": SCORE_CARD_SCHEMA,
 }
+TABLES = tuple(SCHEMAS)
 
 
 def profile_input_key(tables: dict[str, DataFrame], run_date: str,
@@ -174,56 +187,57 @@ class RunStore:
         history). In bucketed mode the BUCKETED_STORE_KEYS tables append
         through the bucketed catalog table instead."""
         if self._bucketed(table):
-            self._register_bucketed(table)
+            # the catalog table holds the declared columns: a narrower
+            # frame (a monitor run's results) appends NULL for the others
+            have = set(df.columns)
+            df = df.select(*(
+                F.col(f.name) if f.name in have
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in SCHEMAS[table].fields))
             keys = BUCKETED_STORE_KEYS[table]
             (df.write.mode("append")
              .bucketBy(self.bucket_results, keys[0], *keys[1:])
              .sortBy(*keys)
              .option("path", self._bucketed_path(table))
-             .format("parquet").saveAsTable(self._catalog_name(table)))
+             .format("parquet").saveAsTable(self._register_bucketed(table)))
             return
         w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(partition_by)
         w.parquet(self._path(table))
 
-    def _register_bucketed(self, table: str) -> bool:
-        """Re-create the catalog entry for a bucketed store table written
-        by an earlier session (external-table DDL over the existing
-        bucketed files; their names carry the bucket ids). True when the
-        table exists (already or after registration)."""
+    def _register_bucketed(self, table: str) -> str:
+        """The catalog name of a bucketed store table, created from its
+        declared schema over the bucketed files when this session has no
+        entry yet (an earlier session's files keep their bucket ids in
+        their names, so the layout survives restarts)."""
         name = self._catalog_name(table)
-        if self.spark.catalog.tableExists(name):
-            return True
-        path = self._bucketed_path(table)
-        if not os.path.isdir(path):
-            return False
-        ddl = self.spark.read.parquet(path)._jdf.schema().toDDL()
-        keys = ", ".join(BUCKETED_STORE_KEYS[table])
-        self.spark.sql(
-            f"CREATE TABLE {name} ({ddl}) USING parquet "
-            f"CLUSTERED BY ({keys}) SORTED BY ({keys}) "
-            f"INTO {self.bucket_results} BUCKETS LOCATION '{path}'")
-        return True
+        if not self.spark.catalog.tableExists(name):
+            ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                            for f in SCHEMAS[table].fields)
+            keys = ", ".join(BUCKETED_STORE_KEYS[table])
+            self.spark.sql(
+                f"CREATE TABLE {name} ({ddl}) USING parquet "
+                f"CLUSTERED BY ({keys}) SORTED BY ({keys}) "
+                f"INTO {self.bucket_results} BUCKETS "
+                f"LOCATION '{self._bucketed_path(table)}'")
+        return name
 
-    def read(self, table: str) -> DataFrame | None:
-        if self._bucketed(table):
-            if self._register_bucketed(table):
-                return self.spark.table(self._catalog_name(table))
-            # fall through: a store created without bucketing may still
-            # hold this table as plain parquet
+    def _bucketed_on_disk(self, table: str) -> bool:
+        # a store created without bucketing may still hold the table as
+        # plain parquet
+        return self._bucketed(table) and os.path.isdir(
+            self._bucketed_path(table))
+
+    def read(self, table: str) -> DataFrame:
+        """``table`` with its declared schema (``SCHEMAS``); empty when
+        nothing was written to it. No Spark job runs."""
+        if self._bucketed_on_disk(table):
+            return self.spark.table(self._register_bucketed(table))
         path = self._path(table)
         if not os.path.isdir(path):
-            return None
-        if table in SCHEMAS:
-            return self.spark.read.schema(SCHEMAS[table]).parquet(path)
-        # an append of an EMPTY relation (e.g. a test run where every
-        # definition was deactivated) leaves only _SUCCESS — no data
-        # files, so schema inference would throw UNABLE_TO_INFER_SCHEMA
-        if not any(f.endswith(".parquet")
-                   for _r, _d, fs in os.walk(path) for f in fs):
-            return None
-        return self.spark.read.parquet(path)
+            return local_frame(self.spark, [], SCHEMAS[table])
+        return self.spark.read.schema(SCHEMAS[table]).parquet(path)
 
     def _append_header(self, table: str, *values: str | None) -> None:
         # a one-row LocalRelation is one partition, so one file; a
@@ -244,17 +258,17 @@ class RunStore:
         """Persist one profiling run: header row + per-column results +
         anomaly screen output (ref run_profiling_bridge.py writes the same
         three). ``input_key`` (``profile_input_key``) is set only when
-        ``inferred`` is the profile of exactly those inputs."""
+        ``inferred`` is the profile of exactly those inputs. Each table
+        gets one file for the run."""
         run_id = self.new_run_id()
         self._append_header("profiling_runs", run_id, self.project_key,
                             table_group_id, dt.datetime.now().isoformat(),
                             run_date, status, input_key)
-        self.append("profile_results",
-                    inferred.withColumn("profile_run_id", F.lit(run_id)),
-                    partition_by="profile_run_id")
-        self.append("profile_anomaly_results",
-                    anomalies.withColumn("profile_run_id", F.lit(run_id)),
-                    partition_by="profile_run_id")
+        for table, rows in (("profile_results", inferred),
+                            ("profile_anomaly_results", anomalies)):
+            self.append(table, rows.coalesce(1)
+                        .withColumn("profile_run_id", F.lit(run_id)),
+                        partition_by="profile_run_id")
         return run_id
 
     def record_test_generation(self, test_definitions: DataFrame,
@@ -264,12 +278,8 @@ class RunStore:
         for the same suite replaces the prior generation (upsert semantics
         live in generation.selection.merge_test_defs; the store keeps every
         generation, consumers take the latest per suite)."""
-        suites = self.read("test_suites")
-        known = set()
-        if suites is not None:
-            known = {r["test_suite_key"]
-                     for r in suites.select("test_suite_key").distinct()
-                     .collect()}
+        known = {r["test_suite_key"] for r in self.read("test_suites")
+                 .select("test_suite_key").distinct().collect()}
         if test_suite_key not in known:
             self._append_header("test_suites", str(uuid.uuid4()),
                                 self.project_key, test_suite_key)
@@ -285,13 +295,15 @@ class RunStore:
     def record_test_run(self, results: DataFrame, test_suite_key: str,
                         run_date: str, status: str = "Complete",
                         start_time: str | None = None) -> str:
+        """Persist one test run: header row + its results, one file."""
         run_id = self.new_run_id()
         self._append_header("test_runs", run_id, self.project_key,
                             test_suite_key,
                             start_time or dt.datetime.now().isoformat(),
                             run_date, status)
         self.append("test_results",
-                    results.withColumn("test_run_id", F.lit(run_id))
+                    results.coalesce(1)
+                    .withColumn("test_run_id", F.lit(run_id))
                     .withColumn("test_suite_key", F.lit(test_suite_key)),
                     partition_by="test_run_id")
         return run_id
@@ -300,27 +312,25 @@ class RunStore:
         """The inferred profile of the latest run stored with ``input_key``,
         read once into a single-partition driver-local frame; None when no
         stored run has that key."""
-        runs = self.read("profiling_runs")
-        hit = None if runs is None else (
-            runs.filter(F.col("input_key") == input_key)
-            .orderBy(F.col("start_time").desc()).limit(1).collect())
+        hit = (self.read("profiling_runs")
+               .filter(F.col("input_key") == input_key)
+               .orderBy(F.col("start_time").desc()).limit(1).collect())
         if not hit:
             return None
         run_id = hit[0]["profile_run_id"]
-        if self._bucketed("profile_results") and self._register_bucketed(
-                "profile_results"):
+        if self._bucketed_on_disk("profile_results"):
             # bucketed files hold rows in bucket order
             res = (self.read("profile_results")
                    .filter(F.col("profile_run_id") == run_id)
                    .drop("profile_run_id")
                    .orderBy("table_name", "column_name"))
         else:
-            # the run's own files, so their schema is the run's
+            # the run's own file, so its rows keep their profiled order
             path = os.path.join(self._path("profile_results"),
                                 f"profile_run_id={run_id}")
             if not os.path.isdir(path):
                 return None
-            res = self.spark.read.parquet(path)
+            res = self.spark.read.schema(INFERRED_SCHEMA).parquet(path)
         rows = res.toArrow()
         if not rows.num_rows:
             return None
@@ -330,18 +340,10 @@ class RunStore:
     # Each mirrors one template/get_entities/*.sql; all filter before
     # aggregating and join only metadata-sized tables.
 
-    def _empty(self, schema: str) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
-
     def list_profiles(self, table_group_id: str | None = None) -> DataFrame:
         """get_profile_list.sql — one row per profiling run with table and
         column counts."""
         runs, res = self.read("profiling_runs"), self.read("profile_results")
-        if runs is None or res is None:
-            return self._empty(
-                "profile_run_id string, project_key string, "
-                "table_groups_id string, start_time string, status string, "
-                "tables long, columns long")
         if table_group_id:
             runs = runs.filter(F.col("table_groups_id") == table_group_id)
         counts = res.groupBy("profile_run_id").agg(
@@ -356,13 +358,8 @@ class RunStore:
     def profile_info(self, profile_run_id: str,
                      table_name: str | None = None) -> DataFrame:
         """get_profile_info.sql — per-column type detail for one run."""
-        res = self.read("profile_results")
-        if res is None:
-            return self._empty(
-                "profile_run_id string, run_date string, table_name string, "
-                "column_name string, general_type string, column_type "
-                "string, functional_data_type string")
-        out = res.filter(F.col("profile_run_id") == profile_run_id)
+        out = self.read("profile_results").filter(
+            F.col("profile_run_id") == profile_run_id)
         if table_name:
             out = out.filter(F.lower("table_name") == table_name.lower())
         return (out.select("profile_run_id", "run_date", "table_name",
@@ -384,39 +381,26 @@ class RunStore:
         trend views); the metric set mirrors profile_results.
 
         Metadata-plane: both sides are one row per column."""
-        runs = self.read("profiling_runs")
         res = self.read("profile_results")
-        empty_schema = (
-            "table_name string, column_name string, change string, "
-            "record_ct_a long, record_ct_b long, value_ct_a long, "
-            "value_ct_b long, null_value_ct_a long, null_value_ct_b long, "
-            "distinct_value_ct_a long, distinct_value_ct_b long, "
-            "functional_data_type_a string, functional_data_type_b string, "
-            "std_pattern_match_a string, std_pattern_match_b string")
-        if runs is None or res is None:
-            return self._empty(empty_schema)
         if run_a is None or run_b is None:
             # default each missing id INDEPENDENTLY: a caller passing only
             # one id means "diff that run against its natural counterpart",
             # not "ignore what I passed and use the latest two"
-            r = runs
+            r = self.read("profiling_runs")
             if table_group_id:
                 r = r.filter(F.col("table_groups_id") == table_group_id)
             ordered = [x["profile_run_id"] for x in
                        r.orderBy(F.col("start_time").desc()).collect()]
             if run_b is None:
                 # newest run (newest distinct from run_a when only a given)
-                cands = [x for x in ordered if x != run_a]
-                if not cands:
-                    return self._empty(empty_schema)
-                run_b = cands[0]
+                run_b = next((x for x in ordered if x != run_a), None)
             if run_a is None:
                 # the run immediately BEFORE run_b in start_time order
                 later = (ordered.index(run_b) + 1 if run_b in ordered
                          else len(ordered))
-                if later >= len(ordered):
-                    return self._empty(empty_schema)
-                run_a = ordered[later]
+                run_a = ordered[later] if later < len(ordered) else None
+            if run_a is None or run_b is None:
+                res = res.limit(0)      # no counterpart run: no diff
         tracked = ["record_ct", "value_ct", "null_value_ct",
                    "distinct_value_ct", "functional_data_type",
                    "std_pattern_match"]
@@ -447,12 +431,8 @@ class RunStore:
         recorded with the run (the modern anomaly screen supersedes the
         legacy inline screen SQL; same consumer contract: table, column,
         screening test, detail)."""
-        res = self.read("profile_anomaly_results")
-        if res is None:
-            return self._empty(
-                "table_name string, column_name string, anomaly_type "
-                "string, detail string, likelihood string")
-        out = res.filter(F.col("profile_run_id") == profile_run_id)
+        out = self.read("profile_anomaly_results").filter(
+            F.col("profile_run_id") == profile_run_id)
         if table_name:
             out = out.filter(F.lower("table_name") == table_name.lower())
         return (out.select("table_name", "column_name", "anomaly_type",
@@ -461,13 +441,8 @@ class RunStore:
 
     def list_test_generation(self, test_suite_key: str) -> DataFrame:
         """get_test_generation_list.sql — one row per generation run."""
-        defs = self.read("test_definitions")
-        if defs is None:
-            return self._empty(
-                "test_suite_key string, last_auto_gen_date string, "
-                "profiling_as_of_date string, tables long, columns long, "
-                "tests long")
-        return (defs.filter(F.col("test_suite_key") == test_suite_key)
+        return (self.read("test_definitions")
+                .filter(F.col("test_suite_key") == test_suite_key)
                 .groupBy("test_suite_key", "last_auto_gen_date",
                          "profiling_as_of_date")
                 .agg(F.countDistinct("table_name").alias("tables"),
@@ -483,12 +458,6 @@ class RunStore:
         from dataops_testgen_spark.execution.test_types import TEST_TYPES
 
         defs = self.read("test_definitions")
-        if defs is None:
-            return self._empty(
-                "project_key string, test_suite_key string, test_type "
-                "string, test_description string, dq_dimension string, "
-                "measure_uom string, table_name string, column_name string, "
-                "threshold_value string, last_auto_gen_date string")
         latest = (defs.filter(F.col("test_suite_key") == test_suite_key)
                   .agg(F.max("last_auto_gen_date")).first()[0])
         cur = defs.filter(
@@ -499,23 +468,19 @@ class RunStore:
              for m in TEST_TYPES.values()],
             "test_type string, test_description string, dq_dimension "
             "string, measure_uom string")
-        thr = ("threshold_value" if "threshold_value" in cur.columns
-               else F.lit(None).cast("string").alias("threshold_value"))
         return (cur.join(F.broadcast(meta), "test_type", "left")
                 .select(F.lit(self.project_key).alias("project_key"),
                         "test_suite_key", "test_type", "test_description",
                         "dq_dimension", "measure_uom", "table_name",
-                        "column_name", thr, "last_auto_gen_date")
+                        "column_name",
+                        # generated thresholds live in params
+                        F.lit(None).cast("string").alias("threshold_value"),
+                        "last_auto_gen_date")
                 .orderBy("table_name", "column_name", "test_type"))
 
     def list_test_runs(self, test_suite_key: str) -> DataFrame:
         """get_test_run_list.sql — run header + result/fail counts."""
         runs, res = self.read("test_runs"), self.read("test_results")
-        if runs is None or res is None:
-            return self._empty(
-                "test_suite_key string, test_time string, status string, "
-                "test_run_id string, table_ct long, result_ct long, "
-                "fail_ct long")
         counts = res.groupBy("test_run_id").agg(
             F.countDistinct(F.lower("table_name")).alias("table_ct"),
             F.count(F.lit(1)).alias("result_ct"),
@@ -533,13 +498,8 @@ class RunStore:
         """get_test_results_for_run_cli.sql — per-test outcome rows."""
         from dataops_testgen_spark.execution.test_types import TEST_TYPES
 
-        res = self.read("test_results")
-        if res is None:
-            return self._empty(
-                "test_suite_key string, table_name string, column_name "
-                "string, test_type string, result string, result_message "
-                "string, result_measure double, measure_uom string")
-        out = res.filter(F.col("test_run_id") == test_run_id)
+        out = self.read("test_results").filter(
+            F.col("test_run_id") == test_run_id)
         if fails_only:
             out = out.filter(F.col("result_code") == 0)
         uom = self.spark.createDataFrame(
@@ -557,19 +517,14 @@ class RunStore:
     def list_test_suites(self) -> DataFrame:
         """get_test_suite_list.sql — suites with latest-generation test
         counts."""
-        suites = self.read("test_suites")
-        if suites is None:
-            return self._empty("test_suite_id string, project_key string, "
-                               "test_suite_key string, tests long")
-        defs = self.read("test_definitions")
-        if defs is None:
-            return suites.withColumn("tests", F.lit(0).cast("long"))
-        counts = (defs.groupBy("test_suite_key", "last_auto_gen_date")
+        counts = (self.read("test_definitions")
+                  .groupBy("test_suite_key", "last_auto_gen_date")
                   .agg(F.count(F.lit(1)).alias("tests")))
         latest = (counts.groupBy("test_suite_key")
                   .agg(F.max_by("tests", "last_auto_gen_date")
                        .alias("tests")))
-        return (suites.join(latest, "test_suite_key", "left")
+        return (self.read("test_suites")
+                .join(latest, "test_suite_key", "left")
                 .select("test_suite_id", "project_key", "test_suite_key",
                         F.coalesce("tests", F.lit(0)).alias("tests"))
                 .orderBy("test_suite_key"))
@@ -577,11 +532,8 @@ class RunStore:
     def list_table_groups(self) -> DataFrame:
         """get_table_group_list.sql — distinct table groups seen in
         profiling runs."""
-        runs = self.read("profiling_runs")
-        if runs is None:
-            return self._empty("table_groups_id string, project_key "
-                               "string, profile_runs long, last_run string")
-        return (runs.groupBy("table_groups_id", "project_key")
+        return (self.read("profiling_runs")
+                .groupBy("table_groups_id", "project_key")
                 .agg(F.count(F.lit(1)).alias("profile_runs"),
                      F.max("start_time").alias("last_run"))
                 .orderBy("table_groups_id"))

@@ -95,6 +95,36 @@ def test_list_suites_and_groups(store_env, spark):
     assert [g["table_groups_id"] for g in groups] == ["tg1"]
 
 
+def test_entity_queries_same_schema_on_empty_store(store_env, spark,
+                                                  tmp_path):
+    """Every entity query runs the same plan over a store that has never
+    been written as over a populated one, so its columns and types do not
+    depend on what the store holds."""
+    full = RunStore(spark, store_env["store"])
+    empty = RunStore(spark, str(tmp_path / "empty"))
+    prof_run = full.list_profiles().first()["profile_run_id"]
+    test_run = full.list_test_runs("suite1").first()["test_run_id"]
+    queries = {
+        "list_profiles": lambda s: s.list_profiles(),
+        "profile_info": lambda s: s.profile_info(prof_run),
+        "diff_profiles": lambda s: s.diff_profiles(),
+        "profile_anomalies": lambda s: s.profile_anomalies(prof_run),
+        "list_test_generation": lambda s: s.list_test_generation("suite1"),
+        "test_info": lambda s: s.test_info("suite1"),
+        "list_test_runs": lambda s: s.list_test_runs("suite1"),
+        "test_results_for_run": lambda s: s.test_results_for_run(test_run),
+        "list_test_suites": lambda s: s.list_test_suites(),
+        "list_table_groups": lambda s: s.list_table_groups(),
+    }
+    for name, query in queries.items():
+        want = [(f.name, f.dataType.simpleString())
+                for f in query(full).schema]
+        got = query(empty)
+        assert [(f.name, f.dataType.simpleString())
+                for f in got.schema] == want, name
+        assert got.collect() == [], name
+
+
 def test_entity_commands_write_csv(store_env):
     csv_dir = store_env["csv"]
     assert main(["list-profiles", "--store", store_env["store"],

@@ -62,6 +62,24 @@ def test_pq_topk_oracle_is_deterministic():
     assert len(results) == 1
 
 
+def test_ivfadc_oracle_is_deterministic():
+    """The IVFADC oracle (the ann_index_probe, ivfadc_topk and
+    rerank_ivfadc seats) sums centroid cosines, codeword norms and ADC dots
+    in dimension or subspace order, so its scores are the same to the last
+    bit on every run. A rounded score is not enough to check that: at
+    sf0.01 two neighbours of query 6 tie at 5 dp and swapped ranks in about
+    1 run in 40 while the sums were split across threads."""
+    con = duckdb.connect()
+    con.execute("SET threads=8")
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{SF_DIR}/embeddings.parquet')")
+    sql = entry_mod._sql_ivfadc("b.vec_id % 2 = 0")
+    raw = sql.replace("ROUND(est_cos, 5) AS", "est_cos AS")
+    assert raw != sql
+    results = {tuple(sorted(con.execute(raw).fetchall())) for _ in range(20)}
+    assert len(results) == 1
+
+
 def test_no_hugeint_on_any_oracle_surface(duck):
     """r14 root cause of the 3-round-red group_dependence seat: DuckDB
     types SUM(BIGINT) [incl. windowed] as HUGEINT, and HUGEINT converts
